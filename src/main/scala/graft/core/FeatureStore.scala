@@ -1,6 +1,6 @@
 package graft.core
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -15,19 +15,20 @@ import graft.operators.Interlace
   *   2. truncate-interlace the stratifications onto the observable
   *   3. aggregate "added" mass at `valid_from` and "removed" mass at
   *      `valid_until` per (stratification, date)
-  *   4. spread over the full date × strata grid and emit
-  *      `observable = cumsum(n_add) - cumsum(n_remove)`
+  *   4. emit `observable = cumsum(n_add) - cumsum(n_remove)` for every
+  *      stratum on every day of [start, end]
   *
   * Spark-first re-architecture (not a port): the reference runs two
-  * group-bys (t_add, t_remove), materializes both, and joins them back on
-  * the grid. Here both aggregations are fused into ONE shuffle: the
-  * interlaced rows are unioned as (date=valid_from, add) ∪
-  * (date=valid_until, remove) and aggregated once with conditional
-  * aggregates; map-side partial aggregation halves the shuffled volume.
-  * The date grid comes from `sequence()` on executors (no driver collect),
-  * strata combos are a tiny distinct that Catalyst/AQE broadcasts, and the
-  * prefix sum is a window partitioned by strata (bounded cardinality) —
-  * the only ordered operation, over the already-tiny aggregated series.
+  * group-bys (t_add, t_remove), materializes both, and right-joins them
+  * onto the date × strata grid. Here both aggregations are fused into ONE
+  * shuffle: each interlaced row explodes into an add mark at
+  * `valid_from`, a remove mark at `valid_until` and an empty mark at
+  * `start`, aggregated once with conditional aggregates (map-side partial
+  * aggregation shrinks the shuffled volume). No grid is built:
+  * [[dailySeries]] takes the prefix sum at each change date, in a window
+  * partitioned by strata (bounded cardinality) over the already-tiny
+  * delta, and run-length expands it to the days up to the next change.
+  * Nothing is cached, so nothing outlives the query.
   */
 object KeyJoinFeatures {
 
@@ -71,20 +72,11 @@ object KeyJoinFeatures {
       endInclusive: String): DataFrame = {
 
     val stratCols = stratExprs.map(_._1)
-    val spark = observable.sparkSession
-    val startD = to_date(lit(start))
-    val endD = to_date(lit(endInclusive))
-    val endExcl = date_add(endD, 1)
-
-    def clamp(df: DataFrame): DataFrame =
-      df.withColumn(Intervals.ValidFrom,
-          greatest(col(Intervals.ValidFrom), startD))
-        .withColumn(Intervals.ValidUntil,
-          least(coalesce(col(Intervals.ValidUntil), endExcl), endExcl))
-
-    val obs = clamp(observable)
-    val strats = stratifications.map(clamp)
-    val interlaced0 = Interlace.truncateInterlace(obs, strats)
+    val endExcl =
+      java.time.LocalDate.parse(endInclusive).plusDays(1).toString
+    def clamp(df: DataFrame) = Intervals.clamp(df, start, endExcl)
+    val interlaced0 = Interlace.truncateInterlace(clamp(observable),
+      stratifications.map(clamp))
     // evaluate the stratification expressions into real columns before
     // the delta aggregation (a plain projection — Catalyst merges it)
     val interlaced = stratExprs.foldLeft(interlaced0) {
@@ -96,59 +88,53 @@ object KeyJoinFeatures {
 
     // Fused add/remove delta aggregation: one scan (explode, not a
     // two-armed union that would read the source twice) and one shuffle.
-    val exploded = interlaced
+    // The third, empty mark puts a row at `start` in every stratum, which
+    // the series emitter needs; it aggregates to nothing.
+    val delta = interlaced
       .select(sc :+ explode(array(
         struct(col(Intervals.ValidFrom).as("date"),
           lit(true).as("is_add"), featC.as("f")),
         struct(col(Intervals.ValidUntil).as("date"),
-          lit(false).as("is_add"), featC.as("f")))).as("__d"): _*)
-
-    // `delta` is used twice (grid combos + the grid join) and is tiny by
-    // construction — one row per (strata, boundary date). Persist it so
-    // the heavy scan/join subtree beneath runs exactly once. A persist,
-    // NOT a localCheckpoint: the InMemoryRelation's size estimate is
-    // what lets Catalyst broadcast the grid join; a checkpointed
-    // LogicalRDD would degrade it to a sort-merge join. The lifetime is
-    // bounded by the query that consumes the series.
-    val delta = exploded
+          lit(false).as("is_add"), featC.as("f")),
+        struct(to_date(lit(start)).as("date"),
+          lit(null).cast("boolean").as("is_add"), featC.as("f")))).as("__d"): _*)
       .groupBy((sc :+ col("__d.date").as("date")): _*)
       .agg(
         agg.aggWhere(col("__d.f"), col("__d.is_add")).as("n_add"),
         agg.aggWhere(col("__d.f"), !col("__d.is_add")).as("n_remove"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
 
-    // Full date × strata grid, generated on executors. Combos come from
-    // `delta`, not `interlaced`: the set is identical (every interlaced
-    // row forms a delta group) but the shared aggregation subtree becomes
-    // a ReusedExchange instead of a second scan+join of the fact table.
-    val dates = spark.range(1).select(
-      explode(sequence(startD, endD)).as("date"))
-    val grid =
-      if (stratCols.isEmpty) dates
-      else delta.select(sc: _*).distinct().crossJoin(dates)
+    dailySeries(delta, stratCols, observableName, start, endInclusive)
+  }
 
-    // Rename the delta side before joining: grid and delta share lineage
-    // (both derive from `interlaced`), and Spark's self-join attribute
-    // resolution can otherwise collapse `grid(c) <=> delta(c)` into a
-    // trivially-true predicate.
-    val deltaR = ("date" +: stratCols).foldLeft(delta) { (d, c) =>
-      d.withColumnRenamed(c, s"__d_$c")
-    }
-    val joinCond = (col("date") === col("__d_date")) +:
-      stratCols.map(c => col(c) <=> col(s"__d_$c"))
-    val joined = grid.join(deltaR, joinCond.reduce(_ && _), "left")
-      .select(
-        (col("date") +: stratCols.map(col)) ++ Seq(
-          coalesce(col("n_add"), lit(0)).as("n_add"),
-          coalesce(col("n_remove"), lit(0)).as("n_remove")): _*)
-
-    val w = Window.partitionBy(stratCols.map(joined(_)): _*)
-      .orderBy(joined("date"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-
-    joined
-      .withColumn(observableName,
-        sum(col("n_add")).over(w) - sum(col("n_remove")).over(w))
-      .select((col("date") +: stratCols.map(col)) :+ col(observableName): _*)
+  /** Per stratum and day of [start, endInclusive]: `cumsum(n_add) -
+    * cumsum(n_remove)` over the rows of `delta` (stratCols, `date`,
+    * `n_add`, `n_remove`; NULL counts 0) dated in [start, day]. `delta`
+    * must hold a `start` row for every stratum (with no strata one is
+    * added here, so an empty period reads 0); rows may tie. The running
+    * sum is taken per change date over a RANGE frame (ties share it and
+    * all but one are dropped), then expanded to the day before the next
+    * change, or to the end. */
+  def dailySeries(delta: DataFrame, stratCols: Seq[String],
+                  observableName: String, start: String,
+                  endInclusive: String): DataFrame = {
+    val startD = to_date(lit(start))
+    val endD = to_date(lit(endInclusive))
+    val marked =
+      if (stratCols.nonEmpty) delta
+      else delta.unionByName(delta.sparkSession.range(1).select(
+        startD.as("date"), lit(null).as("n_add"), lit(null).as("n_remove")))
+    val w = Window.partitionBy(stratCols.map(col): _*).orderBy(col("date"))
+    val upTo = w.rangeBetween(Window.unboundedPreceding, Window.currentRow)
+    def cum(c: String): Column = sum(coalesce(col(c), lit(0))).over(upTo)
+    marked
+      .filter(col("date") >= startD)
+      .select((stratCols.map(col) :+ col("date")) ++ Seq(
+        (cum("n_add") - cum("n_remove")).as(observableName),
+        lead(col("date"), 1).over(w).as("__next")): _*)
+      .filter(col("date") <= endD &&
+        (col("__next").isNull || col("__next") > col("date")))
+      .select((explode(sequence(col("date"),
+          least(date_sub(col("__next"), 1), endD))).as("date") +:
+        stratCols.map(col)) :+ col(observableName): _*)
   }
 }

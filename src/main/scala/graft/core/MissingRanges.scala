@@ -1,53 +1,44 @@
 package graft.core
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
+import java.time.LocalDate
+
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Which date sub-ranges of [start, end] are NOT covered yet?
   * (reference: R/DiseasystoreBase.R:522-605 `determine_missing_ranges` —
   * log-parsing → date set difference → contiguous segments.)
   *
-  * Gaps-and-islands on the missing dates, segmented in two levels so no
-  * window ever sees an unpartitioned day-grained input: island id =
-  * date − row_number PER YEAR (parallel, skew-free), then runs that
-  * touch across a Dec-31→Jan-1 boundary are merged by a second pass
-  * whose input is one row per (year, island) — a few dozen rows for any
-  * realistic study period, so its single-partition window is bounded by
-  * construction (not by data volume).
-  */
+  * Coverage is a few compute-log rows per (loader, slice_ts), so this is
+  * a driver sweep over inclusive ranges sorted by start, carrying the
+  * first day not yet known covered. */
 object MissingRanges {
 
-  /** @param covered single-column DataFrame of covered dates ("date") */
+  /** Uncovered inclusive ranges of [start, endInclusive], sorted; `covered`
+    * ranges may come in any order, overlap or reach outside the period. */
+  def apply(covered: Seq[(LocalDate, LocalDate)], start: LocalDate,
+            endInclusive: LocalDate): Seq[(LocalDate, LocalDate)] = {
+    val (next, gaps) = covered.sortBy(_._1.toEpochDay)
+      .foldLeft((start, Vector.empty[(LocalDate, LocalDate)])) {
+        case ((next, gaps), (s, e)) =>
+          if (e.isBefore(next) || s.isAfter(endInclusive)) (next, gaps)
+          else {
+            val gap = if (s.isAfter(next)) Some(next -> s.minusDays(1)) else None
+            (e.plusDays(1), gaps ++ gap)
+          }
+      }
+    if (next.isAfter(endInclusive)) gaps else gaps :+ (next -> endInclusive)
+  }
+
+  /** DataFrame form: collects the covered dates ("date") inside the
+    * period — at most one per day — and returns (`start_date`, `end_date`). */
   def apply(covered: DataFrame, start: String, endInclusive: String): DataFrame = {
     val spark = covered.sparkSession
-    val requested = spark.range(1).select(
-      explode(sequence(to_date(lit(start)), to_date(lit(endInclusive)))).as("date"))
-    val missing = requested.join(covered.select(to_date(col("date")).as("date")),
-      Seq("date"), "left_anti")
-    // level 1: consecutive runs within each year (partitioned window)
-    val wYear = Window.partitionBy(col("__y")).orderBy(col("date"))
-    val perYear = missing
-      .withColumn("__y", year(col("date")))
-      .withColumn("__island", date_sub(col("date"), row_number().over(wYear)))
-      .groupBy("__y", "__island")
-      .agg(min(col("date")).as("start_date"), max(col("date")).as("end_date"))
-    // level 2: merge ranges touching across year boundaries; input is
-    // range-grained (disjoint, sorted), so "new island" = a gap of >1 day
-    // after the previous range's end
-    val wPrev = Window.orderBy(col("start_date"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val wRun = Window.orderBy(col("start_date"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    perYear
-      .withColumn("__prevEnd", max(col("end_date")).over(wPrev))
-      .withColumn("__new",
-        when(col("__prevEnd").isNull ||
-          col("start_date") > date_add(col("__prevEnd"), 1), 1).otherwise(0))
-      .withColumn("__grp", sum(col("__new")).over(wRun))
-      .groupBy("__grp")
-      .agg(min(col("start_date")).as("start_date"),
-        max(col("end_date")).as("end_date"))
-      .select("start_date", "end_date")
+    import spark.implicits._
+    val (s, e) = (LocalDate.parse(start), LocalDate.parse(endInclusive))
+    val days = covered.select(to_date(col("date")).as("date"))
+      .filter(col("date").between(lit(s), lit(e)))
+      .distinct().as[LocalDate].collect().toSeq
+    apply(days.map(d => d -> d), s, e).toDF("start_date", "end_date")
   }
 }

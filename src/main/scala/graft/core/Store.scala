@@ -1,8 +1,11 @@
 package graft.core
 
+import java.time.LocalDate
+
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** A single feature's definition (reference: R/2_FeatureHandler.R).
   *
@@ -689,16 +692,25 @@ class FeatureStore(
     val storeScope: Option[String] = None,
     val commitProtocol: Committer = Committer.Rename) {
 
+  require(!loaders.contains("logs"),
+    "a loader may not be named 'logs': its table would overwrite the log")
+
   /** Validate a requested study period against the store's bounds
     * (reference: `ds$min_start_date` / `ds$max_end_date`,
-    * R/DiseasystoreBase.R active bindings; ISO strings compare
-    * lexicographically = chronologically). */
-  protected def validateRange(start: String, end: String): Unit = {
-    require(start <= end, s"start_date $start is after end_date $end")
-    minStartDate.foreach(m => require(start >= m,
+    * R/DiseasystoreBase.R active bindings). Both dates must be strict
+    * ISO `yyyy-MM-dd` and are compared as dates; returns them parsed. */
+  protected def validateRange(start: String,
+                              end: String): (LocalDate, LocalDate) = {
+    def date(name: String, v: String): LocalDate =
+      try LocalDate.parse(v) catch { case e: java.time.DateTimeException =>
+        throw new IllegalArgumentException(s"$name '$v' is not yyyy-MM-dd", e) }
+    val (s, e) = (date("start_date", start), date("end_date", end))
+    require(!s.isAfter(e), s"start_date $start is after end_date $end")
+    minStartDate.foreach(m => require(!s.isBefore(date("min_start_date", m)),
       s"start_date $start precedes the store's min_start_date $m"))
-    maxEndDate.foreach(m => require(end <= m,
+    maxEndDate.foreach(m => require(!e.isAfter(date("max_end_date", m)),
       s"end_date $end exceeds the store's max_end_date $m"))
+    (s, e)
   }
 
   def availableFeatures: Seq[String] = dsMap.map(_._1)
@@ -719,9 +731,6 @@ class FeatureStore(
 
   private def tablePath(loader: String) = s"$storePath/$loader"
   private def logPath = s"$storePath/logs"
-
-  private def readIfExists(path: String): Option[DataFrame] =
-    if (fs.exists(new Path(path))) Some(spark.read.parquet(path)) else None
 
   /** Physical location of a loader's committed table — resolved
     * through the [[Committer]] seam (a log-structured committer keeps
@@ -786,30 +795,31 @@ class FeatureStore(
         d.withColumn(f.name, lit(null).cast(f.dataType)))
   }
 
-  /** Covered dates for (loader, sliceTs) according to the log. */
-  private def coveredDates(loader: String, sliceTs: String): DataFrame =
-    readIfExists(logPath) match {
-      case Some(logs) =>
-        logs.filter(col("table") === loader && col("slice_ts") === sliceTs &&
-            col("success") === true)
-          .select(explode(sequence(
-            to_date(col("ds_start")), to_date(col("ds_end")))).as("date"))
-      case None =>
-        spark.range(0).select(lit(null).cast("date").as("date"))
-    }
+  /** Inclusive (ds_start, ds_end) ranges the compute log records for
+    * (loader, sliceTs) — a few rows, collected. The log is read with the
+    * schema it is written with, so no schema-inference job runs. */
+  private def coverage(loader: String,
+                       sliceTs: String): Seq[(LocalDate, LocalDate)] =
+    if (!fs.exists(new Path(logPath))) Nil
+    else spark.read.schema(FeatureStore.LogSchema).parquet(logPath)
+      .filter(col("table") === loader && col("slice_ts") === sliceTs &&
+        col("success") === true)
+      .select("ds_start", "ds_end").collect().toSeq
+      .map(r => LocalDate.parse(r.getString(0)) -> LocalDate.parse(r.getString(1)))
 
   private def appendLog(loader: String, sliceTs: String,
-                        start: String, end: String): Unit = {
-    import spark.implicits._
+                        start: String, end: String): Unit =
     // All loaders append to ONE logs directory; concurrent append jobs
     // would share the committer's `_temporary/0` staging dir and can
-    // clobber each other's task files — serialize on a logs lock.
-    withTableLock("logs") {
-      Seq((loader, sliceTs, start, end, true))
-        .toDF("table", "slice_ts", "ds_start", "ds_end", "success")
+    // clobber each other's task files — serialize on the logs lock
+    // ("__logs" is outside the legal loader-name space; backupTo takes
+    // the same lock).
+    withTableLock("__logs") {
+      spark.createDataFrame(
+        java.util.List.of(Row(loader, sliceTs, start, end, true)),
+        FeatureStore.LogSchema)
         .write.mode("append").parquet(logPath)
     }
-  }
 
   /** The commit protocol for table publishes — `commitProtocol` from
     * the constructor (or override this directly). [[Committer.Rename]]
@@ -1135,11 +1145,10 @@ class FeatureStore(
         true
       }
     }
-    // "__logs" is outside the legal loader-name space — a loader
-    // literally named "logs" must not share this lock
+    // the same "__logs" lock as appendLog: no append lands mid-copy
     //
     // The coverage log is ALWAYS a plain parquet directory, on every
-    // committer: coveredDates reads `logPath` directly and appendLog
+    // committer: coverage reads `logPath` directly and appendLog
     // appends in place (append is not a versioned publish). Publishing
     // the backup's logs through a log-structured committer would put
     // them where the plain-path read never looks (restored store
@@ -1286,18 +1295,16 @@ class FeatureStore(
     * (reference: R/DiseasystoreBase.R:99-274). */
   def getFeature(feature: String, start: String, end: String,
                  sliceTs: String = "1970-01-01 00:00:00"): DataFrame = {
-    validateRange(start, end)
+    val (startD, endD) = validateRange(start, end)
     val loader = loaderOf(feature)
     val handler = loaders(loader)
+    def missing(): Seq[(String, String)] =
+      MissingRanges(coverage(loader, sliceTs), startD, endD)
+        .map { case (s0, e0) => (s0.toString, e0.toString) }
 
-    val missing0 = MissingRanges(coveredDates(loader, sliceTs), start, end)
-      .collect().map(r => (r.getDate(0).toString, r.getDate(1).toString))
-
-    if (missing0.nonEmpty) withTableLock(loader) {
+    if (missing().nonEmpty) withTableLock(loader) {
       // re-check under the lock (another writer may have filled ranges)
-      val missing = MissingRanges(coveredDates(loader, sliceTs), start, end)
-        .collect().map(r => (r.getDate(0).toString, r.getDate(1).toString))
-      missing.foreach { case (s0, e0) =>
+      missing().foreach { case (s0, e0) =>
       // the whole read-merge-publish cycle re-runs on a lost CAS race
       // (a writer whose lock was broken must re-derive from the fresh
       // table, not blindly republish its stale merge)
@@ -1494,6 +1501,11 @@ object StoreCatalog {
 }
 
 object FeatureStore {
+  /** The compute log's schema: one row per computed (loader, slice_ts,
+    * inclusive ISO date range). */
+  private[core] val LogSchema = StructType.fromDDL("`table` STRING, " +
+    "slice_ts STRING, ds_start STRING, ds_end STRING, success BOOLEAN")
+
   /** Per-storePath monotone ingest-timestamp sequence — see
     * `nextIngestTs`. */
   private[core] val lastIngestTs = scala.collection.concurrent.TrieMap

@@ -24,11 +24,11 @@ object TpchFeatureStore {
   def ageGroupFeature(spark: SparkSession, sfDir: String,
                       start: String, end: String): DataFrame = {
     val b = Queries.births(spark, sfDir)
-    val span = 2 // study windows here span < 2 calendar years
+    // ages held in [start, end] plus one (addYears starts a Feb-29 age on
+    // Feb 28, a day before ageOnDate counts it); the filter drops surplus
     b.select(col("c_custkey").as("key_cust"), col("birth"),
-        Ages.ageOnDate(col("birth"), to_date(lit(start))).as("age0"))
-      .withColumn("i", explode(sequence(lit(0), lit(span))))
-      .withColumn("age", col("age0") + col("i"))
+        explode(sequence(Ages.ageOnDate(col("birth"), to_date(lit(start))),
+          Ages.ageOnDate(col("birth"), to_date(lit(end))) + 1)).as("age"))
       .withColumn("valid_from", Ages.addYears(col("birth"), col("age")))
       .withColumn("valid_until", Ages.addYears(col("birth"), col("age") + 1))
       .filter(col("valid_from") <= lit(end) && col("valid_until") > lit(start))

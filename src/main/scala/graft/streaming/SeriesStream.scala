@@ -2,10 +2,9 @@ package graft.streaming
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.core.{Intervals, KeyedLocks}
+import graft.core.{Intervals, KeyJoinFeatures, KeyedLocks}
 
 /** Incrementally-maintained prevalence/incidence series under
   * continuous ingest — the streaming twin of `KeyJoinFeatures` for the
@@ -16,11 +15,11 @@ import graft.core.{Intervals, KeyedLocks}
   * `valid_until`), and that aggregate is mergeable — a new batch of
   * feature intervals contributes its own tiny delta frame, merged by
   * per-group addition. So the materialized state is the delta table
-  * (one row per date × strata — grid-sized, independent of raw data
-  * volume), and `series()` rebuilds the cumsum from it in one
-  * grid-sized window pass. 100 TB of history compresses to a
-  * date×strata grid; each micro-batch costs one scan of ITSELF plus a
-  * grid-sized merge.
+  * (one row per change date × stratum — bounded by the date × strata
+  * grid, independent of raw data volume), and `series()` rebuilds the
+  * cumsum from it with the same run-length emitter as the batch query.
+  * 100 TB of history compresses to at most a date×strata grid; each
+  * micro-batch costs one scan of ITSELF plus a delta-sized merge.
   *
   * Exactly-once: the high-water batch id (`_last_batch`) is written
   * into the delta directory and published by the same rename as the
@@ -174,10 +173,11 @@ class SeriesStream(
       .start()
   }
 
-  /** The current series: date grid × strata, prefix sum over the
-    * materialized delta — grid-sized work, no raw-data access. */
+  /** The current series: the shared [[KeyJoinFeatures.dailySeries]]
+    * emitter over the materialized delta plus one `start` row per
+    * stratum — delta-sized work, no raw-data access. */
   def series(observableName: String): DataFrame = {
-    // snapshot the (grid-sized) delta UNDER the lock: a lazily-returned
+    // snapshot the (small) delta UNDER the lock: a lazily-returned
     // file scan would race the next commit's directory swap and hit
     // deleted files at action time. localCheckpoint materializes the
     // tiny frame eagerly and cuts the file lineage.
@@ -186,26 +186,12 @@ class SeriesStream(
       spark.read.parquet(deltaPath).localCheckpoint()
     }
     val sc = stratCols.map(col)
-    val dates = spark.range(1).select(
-      explode(sequence(startD, endD)).as("date"))
-    val grid =
-      if (stratCols.isEmpty) dates
-      else delta.select(sc: _*).distinct().crossJoin(dates)
-    val deltaR = ("date" +: stratCols).foldLeft(delta) { (d, c) =>
-      d.withColumnRenamed(c, s"__d_$c")
-    }
-    val joinCond = (col("date") === col("__d_date")) +:
-      stratCols.map(c => col(c) <=> col(s"__d_$c"))
-    val joined = grid.join(deltaR, joinCond.reduce(_ && _), "left")
-      .select((col("date") +: sc) ++ Seq(
-        coalesce(col("n_add"), lit(0L)).as("n_add"),
-        coalesce(col("n_remove"), lit(0L)).as("n_remove")): _*)
-    val w = Window.partitionBy(stratCols.map(joined(_)): _*)
-      .orderBy(joined("date"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    joined
-      .withColumn(observableName,
-        sum(col("n_add")).over(w) - sum(col("n_remove")).over(w))
-      .select((col("date") +: sc) :+ col(observableName): _*)
+    val marked =
+      if (stratCols.isEmpty) delta
+      else delta.unionByName(delta.select(sc: _*).distinct()
+        .select(sc ++ Seq(startD.as("date"), lit(0L).as("n_add"),
+          lit(0L).as("n_remove")): _*))
+    KeyJoinFeatures.dailySeries(marked, stratCols, observableName, start,
+      endInclusive)
   }
 }

@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
+import graft.core.{Aggregators, KeyJoinFeatures}
 import graft.operators.{Dedup, Profile, Similarity, TextIndex}
 
 /** Long-lived-session hygiene: no operator may leave a `cache()`/
@@ -81,6 +82,24 @@ class CacheLifecycleSpec extends SparkSpec {
     assertNoCacheLeak("lshTopK") {
       Similarity.lshTopK(vecs, "vec_id", "embedding",
         $"vec_id" % 10 === 0, k = 3, dim = 8).count()
+    }
+  }
+
+  test("keyJoinFeatures with 0 and 1 strata leaves no cache behind") {
+    def d(s: String) = java.sql.Date.valueOf(s)
+    val obs = Seq((1L, d("2020-01-02"), Option(d("2020-01-04"))),
+      (2L, d("2020-01-03"), Option.empty[java.sql.Date]))
+      .toDF("key_p", "valid_from", "valid_until")
+    val strat = Seq((1L, "x", d("2019-01-01"), Option.empty[java.sql.Date]),
+      (2L, "y", d("2019-01-01"), Option.empty[java.sql.Date]))
+      .toDF("key_p", "grp", "valid_from", "valid_until")
+    assertNoCacheLeak("keyJoinFeatures, no strata") {
+      KeyJoinFeatures(obs, "n", "key_p", Aggregators.Count, Nil, Nil,
+        "2020-01-01", "2020-01-05").count()
+    }
+    assertNoCacheLeak("keyJoinFeatures, one stratum") {
+      KeyJoinFeatures(obs, "n", "key_p", Aggregators.Count, Seq(strat),
+        Seq("grp"), "2020-01-01", "2020-01-05").count()
     }
   }
 }

@@ -96,6 +96,29 @@ class CoreOpsSpec extends SparkSpec {
       (d("2020-01-01"), d("2020-01-01")),
       (d("2020-01-04"), d("2020-01-05")),
       (d("2020-01-07"), d("2020-01-07"))))
+    // driver sweep over inclusive ranges
+    def ld(s: String) = java.time.LocalDate.parse(s)
+    def gaps(covered: (String, String)*) =
+      MissingRanges(covered.map { case (s, e) => ld(s) -> ld(e) },
+        ld("2020-01-01"), ld("2020-01-31"))
+        .map { case (s, e) => (s.toString, e.toString) }
+    // unsorted
+    assert(gaps("2020-01-20" -> "2020-01-25", "2020-01-05" -> "2020-01-09") ==
+      Seq("2020-01-01" -> "2020-01-04", "2020-01-10" -> "2020-01-19",
+        "2020-01-26" -> "2020-01-31"))
+    // overlapping and nested
+    assert(gaps("2020-01-03" -> "2020-01-10", "2020-01-08" -> "2020-01-15",
+        "2020-01-04" -> "2020-01-06") ==
+      Seq("2020-01-01" -> "2020-01-02", "2020-01-16" -> "2020-01-31"))
+    // outside the period, or straddling its ends
+    assert(gaps("2019-12-01" -> "2019-12-31", "2019-12-20" -> "2020-01-02",
+        "2020-01-30" -> "2020-02-10", "2020-03-01" -> "2020-03-05") ==
+      Seq("2020-01-03" -> "2020-01-29"))
+    // fully covered, in touching pieces
+    assert(gaps("2020-01-16" -> "2020-02-01", "2019-12-31" -> "2020-01-15")
+      .isEmpty)
+    // nothing covered
+    assert(gaps() == Seq("2020-01-01" -> "2020-01-31"))
   }
 
   test("interval slice keeps overlapping rows only") {

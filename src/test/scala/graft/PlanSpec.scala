@@ -30,17 +30,16 @@ class PlanSpec extends SparkSpec {
       s"scan reads unprojected columns: $read")
   }
 
-  test("keyJoinFeatures delta aggregation is a single shuffle + grid join") {
+  test("keyJoinFeatures delta aggregation is a single shuffle, no join or cache") {
     val plan = planOf(SparkEntry.queries("q07_prevalence")(spark, dir))
     val exchanges = plan.linesIterator
       .count(l => l.contains(") Exchange") || l.contains("BroadcastExchange"))
-    // one hash shuffle (delta agg, inside the persisted subtree), one
-    // broadcast (grid join), one single-partition exchange for the
-    // unpartitioned series window, plus the cached-plan copy of the agg
-    // exchange that InMemoryRelation carries
-    assert(exchanges <= 4, s"unexpected shuffle count $exchanges:\n$plan")
-    assert(plan.contains("BroadcastHashJoin"),
-      "grid join should broadcast the tiny aggregated delta")
+    // one hash shuffle (delta agg) and one single-partition exchange for
+    // the unpartitioned series window; the series is run-length expanded
+    // from the delta, with no date grid to join and nothing cached
+    assert(exchanges <= 2, s"unexpected shuffle count $exchanges:\n$plan")
+    assert(!plan.contains("Join") && !plan.contains("InMemoryRelation"),
+      s"the series must not join a grid or read a cache:\n$plan")
   }
 
   test("truncate interlace joins stratification via broadcast hash join") {

@@ -30,6 +30,38 @@ class StoreSpec extends SparkSpec {
     intercept[IllegalArgumentException] {
       store.getFeature("n_orders", "1995-02-01", "1995-01-01")
     }
+    // dates are parsed strictly and compared as dates: "1995-9-30" is
+    // not ISO (and as a string it sorts after "1995-10-01")
+    val bad = intercept[IllegalArgumentException] {
+      store.getFeature("n_orders", "1995-10-01", "1995-9-30")
+    }
+    assert(bad.getMessage.contains("1995-9-30"), bad.getMessage)
+    intercept[IllegalArgumentException] {
+      store.getFeature("n_orders", "1995-02-30", "1995-03-31")
+    }
+  }
+
+  test("a loader named 'logs' is rejected: it would overwrite the log") {
+    val base = TpchFeatureStore(spark, sfDir,
+      Files.createTempDirectory("graft-store-spec").toString)
+    val err = intercept[IllegalArgumentException] {
+      new graft.core.FeatureStore(spark, sfDir, base.storePath,
+        dsMap = Seq("n_orders" -> "logs"),
+        loaders = Map("logs" -> base.loaders("order_episodes")))
+    }
+    assert(err.getMessage.contains("logs"), err.getMessage)
+  }
+
+  test("age rows cover a compute range of several years") {
+    val store = TpchFeatureStore(spark, sfDir,
+      Files.createTempDirectory("graft-store-spec").toString)
+    val ages = store.getFeature("age_group", "1992-01-01", "1998-12-31")
+    val customers = graft.core.Tables.load(spark, sfDir, "customer").count()
+    for (day <- Seq("1995-06-01", "1998-12-31")) {
+      val covered = graft.core.Intervals.slice(ages, day, day)
+        .select("key_cust").distinct().count()
+      assert(covered == customers, s"customers with an age on $day")
+    }
   }
 
   test("getFeature is compute-if-missing: log-driven range diffing") {
