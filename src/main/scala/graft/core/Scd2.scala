@@ -15,10 +15,11 @@ import org.apache.spark.sql.functions._
   *   - `from_ts` / `until_ts`: transaction-time validity (timestamp
   *     strings; `until_ts` NULL = current)
   *
-  * Scale: `updateSnapshot` is two hash-joins on the checksum (droppable
-  * to sort-merge by Catalyst for huge tables) — no windows over the full
-  * table, no driver materialization. Occurrence numbers make it
-  * multiset-safe (duplicate rows pair up 1:1).
+  * Scale: `updateSnapshot` is one shuffle of the open versions plus the
+  * incoming rows by checksum, with one window over it — closed history
+  * streams through unshuffled, no joins, no driver materialization.
+  * Occurrence numbers make it multiset-safe (duplicate rows pair up
+  * 1:1).
   */
 object Scd2 {
   val FromTs = "from_ts"
@@ -46,14 +47,6 @@ object Scd2 {
       lit(cols.mkString(",")) +:
         cols.map(c => coalesce(col(c).cast("string"), lit("\u0000"))): _*))
 
-  /** Occurrence numbers for multiset pairing. The current side orders by
-    * `from_ts` so that when identical rows exist, the OLDEST copies are
-    * kept/matched first and the newest get closed — deterministic across
-    * runs (ordering by the all-equal checksum would pair arbitrarily). */
-  private def withOcc(df: DataFrame, orderCol: String): DataFrame =
-    df.withColumn("__occ",
-      row_number().over(Window.partitionBy(col(Checksum)).orderBy(col(orderCol))))
-
   /** Merge `incoming` (the freshly computed feature rows) into `current`
     * (the versioned table; pass None to initialize) at transaction time
     * `ts`:
@@ -67,27 +60,36 @@ object Scd2 {
       ts: String,
       dataCols: Seq[String]): DataFrame = {
 
-    val inc = incoming.select(dataCols.map(col): _*)
+    val inserted = incoming.select(dataCols.map(col): _*)
       .withColumn(Checksum, checksum(dataCols))
+      .withColumn(FromTs, lit(ts))
+      .withColumn(UntilTs, lit(null).cast("string"))
 
     current match {
-      case None =>
-        inc.withColumn(FromTs, lit(ts))
-          .withColumn(UntilTs, lit(null).cast("string"))
+      case None => inserted
       case Some(cur) =>
-        val closed = cur.filter(col(UntilTs).isNotNull)
-        val open = withOcc(cur.filter(col(UntilTs).isNull), FromTs)
-        val incO = withOcc(inc, Checksum)
-        val key = Seq(Checksum, "__occ")
-        val toClose = open.join(incO.select(key.map(col): _*), key, "left_anti")
-          .withColumn(UntilTs, lit(ts))
-        val kept = open.join(incO.select(key.map(col): _*), key, "left_semi")
-        val inserted = incO.join(open.select(key.map(col): _*), key, "left_anti")
-          .withColumn(FromTs, lit(ts))
-          .withColumn(UntilTs, lit(null).cast("string"))
-        closed.unionByName(toClose.drop("__occ"))
-          .unionByName(kept.drop("__occ"))
-          .unionByName(inserted.drop("__occ"))
+        // one window per checksum over the open versions and the
+        // incoming rows, current side first and oldest `from_ts` first:
+        // the oldest current copies pair with incoming ones and are
+        // kept, the newest surplus copies are closed, and only the
+        // incoming copies beyond the current count are inserted
+        val side = "__inc"
+        val w = Window.partitionBy(col(Checksum))
+          .orderBy(col(side), col(FromTs))
+        val all = w.rowsBetween(Window.unboundedPreceding,
+          Window.unboundedFollowing)
+        val (occ, nCur, nInc) = (col("__occ"), col("__n_cur"), col("__n_inc"))
+        val open = cur.filter(col(UntilTs).isNull)
+          .withColumn(side, lit(false))
+          .unionByName(inserted.withColumn(side, lit(true)))
+          .select(col("*"), row_number().over(w).as("__occ"),
+            count(when(!col(side), 1)).over(all).as("__n_cur"),
+            count(when(col(side), 1)).over(all).as("__n_inc"))
+          .filter(!col(side) || occ - nCur > nCur)
+          .withColumn(UntilTs,
+            when(!col(side) && occ > nInc, lit(ts)).otherwise(col(UntilTs)))
+          .drop(side, "__occ", "__n_cur", "__n_inc")
+        cur.filter(col(UntilTs).isNotNull).unionByName(open)
     }
   }
 

@@ -959,8 +959,7 @@ class FeatureStore(
     * CAS only fires when cross-process exclusion failed (broken stale
     * lock, two drivers racing), which is exactly when re-deriving from
     * the fresh table is the correct behavior. */
-  private def withCasRetry[T](what: String, attempts: Int = 5,
-                              onStale: () => Unit = () => ())
+  private def withCasRetry[T](what: String, attempts: Int = 5)
                              (body: => T): T = {
     var tries = 0
     while (true) {
@@ -968,7 +967,6 @@ class FeatureStore(
       catch { case e: StaleWriteException =>
         tries += 1
         if (tries >= attempts) throw e
-        onStale()
       }
     }
     throw new IllegalStateException("unreachable")
@@ -982,12 +980,9 @@ class FeatureStore(
     * streaming replay. */
   def appendCommit(loader: String, batch: DataFrame,
                    sliceTs: String): Unit = withTableLock(loader) {
-    // on a stale retry the cached transaction-time high water may
-    // trail the interfering writer's commit — drop it so the clamp
-    // re-derives from the (fresh) table
-    withCasRetry(s"appendCommit($loader)", onStale = () =>
-        FeatureStore.ingestHighWater.remove((storePath, loader))) {
+    withCasRetry(s"appendCommit($loader)") {
     val expectedGen = tableGen(loader)
+    val hwKey = (storePath, loader)
     val dataCols = batch.columns.toSeq
     // SET semantics throughout (first batch included): updateSnapshot
     // pairs duplicates as a multiset, so without the distinct a
@@ -995,7 +990,7 @@ class FeatureStore(
     // register as a second occurrence (a new version) instead of a
     // no-op. Exactly-once materialization from at-least-once delivery
     // requires the feed's rows to be set-valued.
-    val merged = readTable(loader).map(widenForMerge(_, batch.schema,
+    val (merged, ts) = readTable(loader).map(widenForMerge(_, batch.schema,
         loader)) match {
       case Some(cur) =>
         // Transaction-time monotonicity must hold against the TABLE,
@@ -1006,27 +1001,29 @@ class FeatureStore(
         // duplicate versions, broken time travel. Clamp to just past
         // the persisted high-water mark — which must cover until_ts
         // too (a close-only commit advances transaction time without
-        // inserting any from_ts). The table scan runs once per
-        // (store, loader); later commits carry the mark forward in
-        // memory under the same lock.
-        val hwKey = (storePath, loader)
-        val maxTs = FeatureStore.ingestHighWater.getOrElseUpdate(hwKey,
-          Option(cur.agg(max(greatest(col(Scd2.FromTs),
+        // inserting any from_ts). The mark this JVM recorded at its last
+        // commit is trusted only while the table is still at that
+        // generation: any other commit (another writer, a getFeature
+        // merge, a lost CAS race) moves the generation, and the mark is
+        // then re-read from the table.
+        val maxTs = FeatureStore.ingestHighWater.get(hwKey)
+          .collect { case (gen, hw) if gen == expectedGen => hw }
+          .getOrElse(Option(cur.agg(max(greatest(col(Scd2.FromTs),
               coalesce(col(Scd2.UntilTs), col(Scd2.FromTs)))))
             .head.getString(0)).getOrElse(""))
         val ts = if (maxTs.isEmpty || sliceTs > maxTs) sliceTs
           else Scd2.tickAfter(maxTs)
-        FeatureStore.ingestHighWater.put(hwKey, ts)
         val curOpen = Scd2.sliceAt(cur, ts)
           .drop(Scd2.Checksum, Scd2.FromTs, Scd2.UntilTs)
-        Scd2.updateSnapshot(Some(cur),
+        (Scd2.updateSnapshot(Some(cur),
           curOpen.select(dataCols.map(col): _*).unionByName(batch)
             .distinct(),
-          ts, dataCols)
-      case None => Scd2.updateSnapshot(None, batch.distinct(), sliceTs,
-        dataCols)
+          ts, dataCols), ts)
+      case None => (Scd2.updateSnapshot(None, batch.distinct(), sliceTs,
+        dataCols), sliceTs)
     }
     swapIn(loader, merged, expectedGen)
+    FeatureStore.ingestHighWater.put(hwKey, (expectedGen + 1, ts))
     }
   }
 
@@ -1475,11 +1472,15 @@ object StoreCatalog {
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(p)) return
     pattern match {
-      case None => fs.delete(p, true)
+      case None =>
+        FeatureStore.ingestHighWater.keys.filter(_._1 == storePath)
+          .foreach(FeatureStore.ingestHighWater.remove)
+        fs.delete(p, true)
       case Some(pat) =>
         val victims = tables(spark, storePath)
           .filter(t => t != "logs" && t.matches(pat))
         victims.foreach { t =>
+          FeatureStore.ingestHighWater.remove((storePath, t))
           fs.delete(new Path(s"$storePath/$t"), true)
           // sidecars: generation markers, stale staging/backup dirs,
           // abandoned lock files — a re-created table starts fresh
@@ -1511,9 +1512,10 @@ object FeatureStore {
   private[core] val lastIngestTs = scala.collection.concurrent.TrieMap
     .empty[String, java.util.concurrent.atomic.AtomicReference[String]]
 
-  /** Per-(storePath, loader) persisted transaction-time high-water
-    * mark, seeded from the table on first contact — see
-    * `appendCommit`. Mutated only under that loader's table lock. */
+  /** Per-(storePath, loader) transaction-time high-water mark of the
+    * last `appendCommit`, keyed with the table generation it is valid
+    * at — see `appendCommit`. Mutated only under that loader's table
+    * lock. */
   private[core] val ingestHighWater = scala.collection.concurrent.TrieMap
-    .empty[(String, String), String]
+    .empty[(String, String), (Long, String)]
 }

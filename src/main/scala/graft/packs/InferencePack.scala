@@ -277,9 +277,10 @@ object InferencePack extends QueryPack {
         .groupBy("c_custkey").agg(count(lit(1)).as("n_orders"))
       val cols = Seq("c_custkey", "n_orders")
       // checkpoint between merges: each updateSnapshot reads its
-      // `current` in three branches, so a bare lineage chain would
-      // recompute v1 ~16x inside v3 (the store's real path
-      // materializes to parquet between transactions)
+      // `current` in two branches (closed history, open versions), so
+      // a bare lineage chain would recompute v1 ~4x inside v3 (the
+      // store's real path materializes to parquet between
+      // transactions)
       val v1 = graft.core.Scd2.updateSnapshot(None,
         snap("1994-01-01"), Cdc1, cols).localCheckpoint(true)
       val v2 = graft.core.Scd2.updateSnapshot(Some(v1),

@@ -3,6 +3,7 @@ package graft.tools
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
+import graft.core.Scd2
 import graft.operators.SuffixDedup
 
 /** Dev tool: formatted physical plans for the FORCED-DISTRIBUTED
@@ -12,7 +13,8 @@ import graft.operators.SuffixDedup
   * finishes disabled on a synthetic corpus). Usage:
   *   sbt "runMain graft.tools.PlanDump sa_lcp"
   * Targets: sa_lcp (SuffixDedup distributed tail incl. the LCP token
-  * re-attach). Output goes to stdout between BEGIN/END markers. */
+  * re-attach), scd2_merge (`Scd2.updateSnapshot` over a parquet-backed
+  * versioned table). Output goes to stdout between BEGIN/END markers. */
 object PlanDump {
   def main(args: Array[String]): Unit = {
     val spark = SparkSession.builder()
@@ -43,6 +45,24 @@ object PlanDump {
         println("========== BEGIN sa_lcp ==========")
         spans.explain("formatted")
         println("========== END sa_lcp ==========")
+      case "scd2_merge" =>
+        // a parquet-backed versioned table with closed history, merged
+        // with a revision that keeps, changes and adds rows — the shape
+        // of every refresh-step and appendCommit merge
+        val cols = Seq("key", "v")
+        def snap(salt: Long) = spark.range(20000).select(col("id").as("key"),
+          pmod(xxhash64(lit(salt), col("id")), lit(4L)).as("v"))
+        val dir = java.nio.file.Files.createTempDirectory("plandump-scd2")
+          .resolve("t").toString
+        val v1 = Scd2.updateSnapshot(None, snap(1L), "2020-01-01 00:00:00",
+          cols)
+        Scd2.updateSnapshot(Some(v1), snap(2L), "2020-01-02 00:00:00", cols)
+          .write.parquet(dir)
+        val merged = Scd2.updateSnapshot(Some(spark.read.parquet(dir)),
+          snap(3L), "2020-01-03 00:00:00", cols)
+        println("========== BEGIN scd2_merge ==========")
+        merged.explain("formatted")
+        println("========== END scd2_merge ==========")
       case "graph_prep" =>
         // evidence for the r18 single-materialization prep (the saved
         // write lives in side jobs, not the returned plan): run the

@@ -42,6 +42,36 @@ class PlanSpec extends SparkSpec {
       s"the series must not join a grid or read a cache:\n$plan")
   }
 
+  test("SCD2 merge is one shuffle, no join") {
+    import spark.implicits._
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.{BroadcastExchangeLike,
+      ShuffleExchangeLike}
+    import org.apache.spark.sql.execution.joins.BaseJoinExec
+    val cols = Seq("k", "v")
+    val dir = java.nio.file.Files.createTempDirectory("plan-scd2")
+      .resolve("t").toString
+    val v1 = Scd2.updateSnapshot(None,
+      Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF(cols: _*), "t1", cols)
+    Scd2.updateSnapshot(Some(v1),
+      Seq((1L, "a"), (2L, "x"), (3L, "c"), (3L, "c")).toDF(cols: _*),
+      "t2", cols).write.parquet(dir)
+    val merged = Scd2.updateSnapshot(Some(spark.read.parquet(dir)),
+      Seq((1L, "a"), (2L, "y"), (3L, "c"), (4L, "d")).toDF(cols: _*),
+      "t3", cols)
+    assert(merged.collect().length == 7)
+    // the executed (AQE-final) plan, query stages included
+    val nodes = new AdaptiveSparkPlanHelper {}
+      .collect(merged.queryExecution.executedPlan) { case p => p }
+    val plan = merged.queryExecution.executedPlan.treeString
+    assert(!nodes.exists(_.isInstanceOf[BaseJoinExec]),
+      s"the merge must not join:\n$plan")
+    assert(!nodes.exists(_.isInstanceOf[BroadcastExchangeLike]),
+      s"the merge must not broadcast:\n$plan")
+    assert(nodes.count(_.isInstanceOf[ShuffleExchangeLike]) == 1,
+      s"the merge must shuffle exactly once:\n$plan")
+  }
+
   test("truncate interlace joins stratification via broadcast hash join") {
     val plan = planOf(SparkEntry.queries("q08_prevalence_strat")(spark, dir))
     assert(plan.contains("BroadcastHashJoin"),

@@ -97,6 +97,44 @@ class PropertySpec extends SparkSpec {
     }
   }
 
+  test("scd2 merge matches a multiset fold with duplicate rows") {
+    // few distinct rows, so copies repeat inside one snapshot and
+    // across snapshots
+    val snapGen = Gen.choose(0, 8).flatMap(n =>
+      Gen.listOfN(n, Gen.zip(Gen.choose(0L, 2L), Gen.choose(0, 1))))
+    forSeeds(Gen.choose(3, 4).flatMap(Gen.listOfN(_, snapGen)), 12) {
+      snaps =>
+      type V = ((Long, Int), String, Option[String])
+      // per row: keep the oldest min(open, n) open copies, close the
+      // rest at ts, insert the n - open copies the table lacks
+      def fold(table: Seq[V], snap: Seq[(Long, Int)], ts: String): Seq[V] = {
+        val (open, closed) = table.partition(_._3.isEmpty)
+        val n = snap.groupBy(identity).view.mapValues(_.size).toMap
+        val byRow = open.groupBy(_._1)
+        closed ++ (byRow.keySet ++ n.keySet).toSeq.flatMap { row =>
+          val cur = byRow.getOrElse(row, Seq.empty).sortBy(_._2)
+          val k = n.getOrElse(row, 0)
+          cur.take(k) ++ cur.drop(k).map(v => (row, v._2, Some(ts))) ++
+            Seq.fill(k - cur.size)((row, ts, Option.empty[String]))
+        }
+      }
+      val tss = snaps.indices.map(i => s"t${i + 1}")
+      var table = Option.empty[org.apache.spark.sql.DataFrame]
+      var expected = Seq.empty[V]
+      snaps.zip(tss).foreach { case (snap, ts) =>
+        table = Some(Scd2.updateSnapshot(table, snap.toDF("id", "v"), ts,
+          Seq("id", "v")).localCheckpoint(true))
+        expected = fold(expected, snap, ts)
+      }
+      val got = table.get.select("id", "v", Scd2.FromTs, Scd2.UntilTs)
+        .as[(Long, Int, String, Option[String])].collect()
+        .map { case (id, v, f, u) => ((id, v), f, u) }.toSeq
+      def key(r: V) = (r._1._1, r._1._2, r._2, r._3.getOrElse(""))
+      assert(got.sortBy(key) == expected.sortBy(key),
+        s"snapshots $snaps")
+    }
+  }
+
   test("interlace segments tile each key's covered timeline w/o overlap") {
     forSeeds(Gen.zip(Gen.listOfN(8, ivGen), Gen.listOfN(8, ivGen)), 8) {
       case (xs0, ys0) =>

@@ -111,6 +111,64 @@ class StoreStreamSpec extends SparkSpec {
     assert(got == direct)
   }
 
+  test("a dropped table's high-water mark does not clamp its successor") {
+    val store = freshStore()
+    def batch(key: Long) = Seq(featRow(key, "A", "2024-01-01"))
+      .toDF("key_cust", "segment", "valid_from", "valid_until")
+    store.appendCommit("feed", batch(1L), "2020-01-01 05:00:00")
+    store.appendCommit("feed", batch(2L), "2020-01-01 06:00:00")
+    graft.core.StoreCatalog.drop(spark, store.storePath, Some("feed"))
+    store.appendCommit("feed", batch(3L), "2020-01-01 00:00:01")
+    store.appendCommit("feed", batch(4L), "2020-01-01 00:00:02")
+    val table = store.versionedTable("feed")
+    assert(table.select(col(Scd2.FromTs).cast("string")).as[String]
+      .collect().sorted.toSeq ==
+      Seq("2020-01-01 00:00:01", "2020-01-01 00:00:02"))
+    assert(Scd2.sliceAt(table, "2020-01-01 00:00:02")
+      .select("key_cust").as[Long].collect().toSet == Set(3L, 4L))
+  }
+
+  /** One stored `order_episodes` row, re-dated so it is a new version. */
+  private def episodeRow(store: graft.core.FeatureStore, until: String) =
+    store.versionedTable("order_episodes")
+      .drop(Scd2.Checksum, Scd2.FromTs, Scd2.UntilTs).limit(1)
+      .withColumn("valid_until", lit(java.sql.Date.valueOf(until)))
+      .localCheckpoint(true)
+
+  private def lastFromTs(store: graft.core.FeatureStore) =
+    store.versionedTable("order_episodes").agg(max(Scd2.FromTs))
+      .as[String].head()
+
+  test("a dropped table's mark does not survive a re-create to its " +
+    "generation") {
+    // getFeature rebuilds the dropped table to the generation the old
+    // mark was recorded at, so only dropping the mark keeps it out
+    val store = freshStore()
+    val loader = "order_episodes"
+    store.getFeature("n_orders", "1995-01-01", "1995-01-31")
+    store.appendCommit(loader, episodeRow(store, "2030-01-01"),
+      "2020-01-01 05:00:00")
+    graft.core.StoreCatalog.drop(spark, store.storePath, Some(loader))
+    store.getFeature("n_orders", "1995-01-01", "1995-01-31")
+    store.getFeature("n_orders", "1995-02-01", "1995-02-28")
+    store.appendCommit(loader, episodeRow(store, "2031-01-01"),
+      "2020-01-01 00:00:01")
+    assert(lastFromTs(store) == "2020-01-01 00:00:01")
+  }
+
+  test("appendCommit clamps past a getFeature commit made after its mark") {
+    val store = freshStore()
+    val loader = "order_episodes"
+    store.getFeature("n_orders", "1995-01-01", "1995-01-31")
+    store.appendCommit(loader, episodeRow(store, "2030-01-01"),
+      "2020-01-01 05:00:00")
+    store.getFeature("n_orders", "1995-01-01", "1995-01-31",
+      "2020-01-01 07:00:00")
+    store.appendCommit(loader, episodeRow(store, "2031-01-01"),
+      "2020-01-01 06:00:00")
+    assert(lastFromTs(store) == "2020-01-01 07:00:00.001")
+  }
+
   test("appendCommit matches batch SCD2 of the union") {
     val store = freshStore()
     val b0 = Seq(featRow(1L, "A", "2024-01-01"))
