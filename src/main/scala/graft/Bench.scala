@@ -365,31 +365,34 @@ object Bench {
     // in DESCENDING-time order (the queries where a regression is
     // visible above the job floor) only while the whole line stays
     // under budget; the complete map still lives in bench_full.json.
-    // Additive-only: every pre-r18 field is unchanged.
-    val lineBudget = 1500
-    def assemble(qmap: String, dropped: Int): String =
-      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","n":${
-        mins.size},"suspects":${
-        suspects.map("\"" + _ + "\"").mkString("[", ",", "]")},"queries":{$qmap},"queries_omitted":$dropped,"queries_file":"bench_full.json","sf":"$sfDir"}"""
-    val entries = mins.sortBy(-_._2)
-      .map { case (k, v) => "\"" + k + "\":" + fmt(v) }
-    var kept = 0
-    var acc = new StringBuilder
-    while (kept < entries.size && {
-        val cand = if (kept == 0) entries(kept)
-          else "," + entries(kept)
-        assemble(acc.toString + cand, 0).length <= lineBudget
-      }) {
-      if (kept > 0) acc.append(",")
-      acc.append(entries(kept))
-      kept += 1
-    }
-    val line = assemble(acc.toString, entries.size - kept)
+    // Additive-only: every pre-r18 field is unchanged. See summaryLine.
+    val line = summaryLine(fmt(total), suspects,
+      mins.sortBy(-_._2).map { case (k, v) => "\"" + k + "\":" + fmt(v) },
+      sfDir)
     // The driver's tail-scrape has parsed to null for 12 rounds (sbt's
     // "[info] " prefix + surrounding log noise defeat it) — ALSO write
     // the summary object to a file it can read directly.
     if (!isChild && !isIsolated) writeJson("bench_summary.json", line + "\n")
     // Printed AFTER spark.stop() so no executor/log line lands behind it.
     println(line)
+  }
+
+  val LineBudget = 1500
+
+  /** The summary line: `entries` (`"name":secs`, slowest first) are kept
+    * while the whole line fits in `LineBudget` bytes. Each candidate is
+    * measured with the widest `queries_omitted` the line can carry,
+    * `entries.size`, so the printed line never exceeds the budget. */
+  def summaryLine(total: String, suspects: Seq[String],
+                  entries: Seq[String], sfDir: String): String = {
+    def assemble(kept: Int, omitted: Int): String =
+      s"""{"metric":"total","value":$total,"unit":"sec","n":${
+        entries.size},"suspects":${
+        suspects.map("\"" + _ + "\"").mkString("[", ",", "]")},"queries":{${
+        entries.take(kept).mkString(",")}},"queries_omitted":$omitted,"queries_file":"bench_full.json","sf":"$sfDir"}"""
+    val kept = (1 to entries.size).takeWhile(k =>
+      assemble(k, entries.size).getBytes("UTF-8").length <= LineBudget)
+      .lastOption.getOrElse(0)
+    assemble(kept, entries.size - kept)
   }
 }

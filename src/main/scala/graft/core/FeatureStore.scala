@@ -28,7 +28,8 @@ import graft.operators.Interlace
   * [[dailySeries]] takes the prefix sum at each change date, in a window
   * partitioned by strata (bounded cardinality) over the already-tiny
   * delta, and run-length expands it to the days up to the next change.
-  * Nothing is cached, so nothing outlives the query.
+  * Nothing is cached, with any number of strata (the interlace of 2+
+  * strata is one window), so nothing outlives the query.
   */
 object KeyJoinFeatures {
 

@@ -109,9 +109,9 @@ object Intervals {
   /** Per-key interval DIFFERENCE a ∖ b: the parts of `a`'s validity not
     * covered by `b` (e.g. hospital episodes minus ICU stays). Composed
     * from the engine's own machinery: tag both sides, segment on the
-    * per-key breakpoint union (`Interlace.interlace` — one window, no
-    * join explosion), keep segments covered only by `a`, re-merge
-    * touching survivors. */
+    * per-key breakpoint union (`Interlace.interlace` — one window per
+    * key over both sides, no join), keep segments covered only by `a`,
+    * re-merge touching survivors. */
   def subtractPerKey(a: DataFrame, b: DataFrame,
                      keys: Seq[String]): DataFrame =
     tagSegmentFilter(a, b, keys,
@@ -132,9 +132,9 @@ object Intervals {
     val iv = Seq(col(ValidFrom), col(ValidUntil))
     val aT = a.select(kc ++ iv :+ lit(1).as("__in_a"): _*)
     val bT = b.select(kc ++ iv :+ lit(1).as("__in_b"): _*)
-    // interlace derives segment ends with lead() over DISTINCT
-    // breakpoints, so every emitted segment is non-empty by
-    // construction — no sliver filtering needed
+    // interlace ends each segment at the next DISTINCT breakpoint of
+    // the key (lead() past the ties), so every emitted segment is
+    // non-empty by construction — no sliver filtering needed
     val seg = graft.operators.Interlace.interlace(Seq(aT, bT), keys)
     mergePerKey(seg.filter(keep).select(kc ++ iv: _*), keys)
   }

@@ -673,11 +673,11 @@ object Committer {
   * as SCD2-versioned parquet under `storePath`, giving time travel by
   * transaction time.
   *
-  * Scale notes: the SCD2 merge is a checksum hash-join; the swap is an
-  * atomic directory rename (at warehouse scale you would commit through a
-  * transactional table format instead — the operator semantics are
-  * identical). Reads are parquet scans with interval predicates that push
-  * down.
+  * Scale notes: the SCD2 merge is one window per checksum (one shuffle,
+  * no join); the swap is an atomic directory rename (at warehouse scale
+  * you would commit through a transactional table format instead — the
+  * operator semantics are identical). Reads are parquet scans with
+  * interval predicates that push down.
   */
 class FeatureStore(
     val spark: SparkSession,

@@ -16,11 +16,12 @@ import graft.core.Intervals.{ValidFrom, ValidUntil, intervalsOverlap}
   * timeline on the union of all validity breakpoints (the SCDB::interlace
   * step used at R/truncate_interlace.R:117).
   *
-  * Spark-first design: both are expressed as equi-joins on the key columns
-  * with range residual predicates, so Catalyst plans shuffle/broadcast
-  * hash joins keyed on `key_*` — co-partitioned and scalable; no per-key
-  * driver loops. Breakpoint segmentation is a window `lead` per key, not
-  * an N-way iterative join.
+  * Spark-first design: `truncate` is an equi-join on the key columns with
+  * a range residual predicate, so Catalyst plans a shuffle/broadcast hash
+  * join keyed on `key_*`. `interlace` is one window per key over the
+  * union of its inputs (one shuffle), not a join per table; nothing is
+  * cached and no per-key loop runs outside Spark. Per key, interlace does
+  * O(events × rows) work, the same bound as a per-key range join.
   */
 object Interlace {
 
@@ -66,80 +67,66 @@ object Interlace {
     * that segment (NULL when that table has no valid row there). Payload
     * columns appearing in several tables (e.g. the primary's columns
     * repeated through `truncateOne`) are coalesced in first-table order.
-    * Segments covered by no table are dropped.
+    * Segments covered by no table are dropped. Rows of one table that
+    * overlap within a key combine as SCDB's do: one output row per
+    * combination of the tables' valid rows.
+    *
+    * One pass over the union of the inputs: each row becomes a start
+    * event at `valid_from`, carrying its payload in its table's own
+    * struct column, and an end event at `valid_until`. One window per
+    * key ordered by event date collects the rows started so far and
+    * `lead` finds the next distinct date; a higher-order `filter` keeps
+    * the rows still valid there, and one `explode_outer` per table forms
+    * the combinations. A NULL date cuts nothing: an open end adds no
+    * breakpoint and a row with no start is never valid, while empty and
+    * inverted rows still cut the others. Cost per key: O(events × rows)
+    * work, the bound of a per-key range join.
     */
-  def interlace(tables0: Seq[DataFrame], keys: Seq[String]): DataFrame = {
-    require(tables0.nonEmpty, "interlace needs at least one table")
-    if (tables0.size == 1) return tables0.head
-
-    // Each input feeds two consumers (the breakpoint union and its
-    // payload join). Inputs that are themselves expensive (joins,
-    // aggregates, windows — e.g. truncateOne outputs) are persisted so
-    // the subtree runs once; bare scan/filter/project chains are NOT
-    // (re-scanning beats materializing a cache copy, and the scan keeps
-    // its pushed filters). Self-join attribute dedup blocks
-    // ReuseExchange here, so the persist is the only sharing mechanism.
-    // Deliberately a persist, NOT a localCheckpoint like the dedup/ANN
-    // operators: a checkpointed LogicalRDD drops the size estimate that
-    // lets Catalyst broadcast the small stratification side, while the
-    // InMemoryRelation keeps it. The lifetime is bounded by the store
-    // build that consumes the interlaced frame.
-    def isExpensive(df: DataFrame): Boolean =
-      df.queryExecution.optimizedPlan.collectFirst {
-        case p: org.apache.spark.sql.catalyst.plans.logical.Join => p
-        case p: org.apache.spark.sql.catalyst.plans.logical.Aggregate => p
-        case p: org.apache.spark.sql.catalyst.plans.logical.Window => p
-        case p: org.apache.spark.sql.catalyst.plans.logical.Generate => p
-      }.isDefined
-    val tables = tables0.map(t =>
-      if (isExpensive(t))
-        t.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      else t)
-
+  def interlace(tables: Seq[DataFrame], keys: Seq[String]): DataFrame = {
+    require(tables.nonEmpty, "interlace needs at least one table")
+    if (tables.size == 1) return tables.head
     val keyCols = keys.map(col)
-    // Union of breakpoints per key (open ends contribute no breakpoint).
-    val points = tables.map { t =>
-      t.select(keyCols :+ col(ValidFrom).as("p"): _*)
-        .unionByName(
-          t.filter(col(ValidUntil).isNotNull)
-            .select(keyCols :+ col(ValidUntil).as("p"): _*))
-    }.reduce(_ unionByName _).distinct()
+    val payloads = tables.map(payloadCols(_, keys))
+    val rowCols = tables.indices.map(i => s"__r$i")
+    // table i's rows carry (payload, valid_until) in `__r$i`, NULL in
+    // every other table's rows
+    val rows = tables.indices.map { i =>
+      tables(i).select(keyCols ++ Seq(
+        struct(payloads(i).map(col) :+ col(ValidUntil): _*).as(rowCols(i)),
+        col(ValidFrom), col(ValidUntil)): _*)
+    }.reduce(_.unionByName(_, allowMissingColumns = true))
+    val events = rows
+      .select(keyCols ++ rowCols.map(col) :+ explode(array(
+        struct(col(ValidFrom).as("d"), lit(true).as("start")),
+        struct(col(ValidUntil).as("d"), lit(false).as("start")))).as("__e"): _*)
+      .filter(col("__e.d").isNotNull)
+      .select(keyCols ++ rowCols.map(r => when(col("__e.start"), col(r)).as(r))
+        :+ col("__e.d").as("__d"): _*)
 
-    val w = Window.partitionBy(keyCols: _*).orderBy(col("p"))
-    val segs = points
-      .withColumn("seg_until", lead(col("p"), 1).over(w))
-      .withColumnRenamed("p", "seg_from")
+    // Every event of a date sees the same RANGE frame; only the last one
+    // of them has the next distinct date as its `lead`.
+    val d = col("__d")
+    val w = Window.partitionBy(keyCols: _*).orderBy(d)
+    val upTo = w.rangeBetween(Window.unboundedPreceding, Window.currentRow)
+    val segs = events
+      .select(keyCols ++ rowCols.map(r =>
+          filter(collect_list(col(r)).over(upTo),
+            x => x(ValidUntil) > d || x(ValidUntil).isNull).as(r)) ++
+        Seq(d.as(ValidFrom), lead(d, 1).over(w).as(ValidUntil)): _*)
+      .filter((col(ValidUntil).isNull || col(ValidUntil) > col(ValidFrom)) &&
+        rowCols.map(r => size(col(r)) > 0).reduce(_ || _))
+    val combos = rowCols.foldLeft(segs)((df, r) =>
+      df.withColumn(r, explode_outer(col(r))))
 
-    // Attach each table's payload where the segment start falls inside the
-    // table's validity (segments never straddle a breakpoint, so testing
-    // the start point suffices). Payloads get unique temp names; same-named
-    // payloads across tables are coalesced at the end.
-    val payloads: Seq[Seq[String]] = tables.map(payloadCols(_, keys))
-    val joined = tables.zipWithIndex.foldLeft(segs) { case (acc, (t, i)) =>
-      val rhs = t.select(
-        keys.map(k => col(k).as(s"__k${i}_$k")) ++
-          payloads(i).map(c => col(c).as(s"__p${i}_$c")) ++ Seq(
-            col(ValidFrom).as(s"__vf$i"), col(ValidUntil).as(s"__vu$i"),
-            lit(true).as(s"__hit$i")): _*)
-      val cond = keys.map(k => acc(k) <=> rhs(s"__k${i}_$k")).reduce(_ && _) &&
-        rhs(s"__vf$i") <= acc("seg_from") &&
-        (rhs(s"__vu$i") > acc("seg_from") || rhs(s"__vu$i").isNull)
-      acc.join(rhs, cond, "left")
-        .drop((keys.map(k => s"__k${i}_$k") ++ Seq(s"__vf$i", s"__vu$i")): _*)
-    }
-
-    val covered = tables.indices.map(i => col(s"__hit$i") === lit(true))
-      .reduce(_ || _)
-    val outNames = payloads.flatten.distinct
     val outCols =
-      keys.map(col) ++
-        outNames.map { c =>
-          val sources = tables.indices
-            .filter(i => payloads(i).contains(c)).map(i => col(s"__p${i}_$c"))
+      keyCols ++
+        payloads.flatten.distinct.map { c =>
+          val sources = tables.indices.filter(i => payloads(i).contains(c))
+            .map(i => col(rowCols(i)).getField(c))
           (if (sources.size == 1) sources.head else coalesce(sources: _*))
             .as(c)
-        } ++ Seq(col("seg_from").as(ValidFrom), col("seg_until").as(ValidUntil))
-    joined.filter(covered).select(outCols: _*)
+        } ++ Seq(col(ValidFrom), col(ValidUntil))
+    combos.select(outCols: _*)
   }
 
   /** truncate_interlace: truncate each secondary to the primary, then

@@ -49,7 +49,7 @@ object Scd2Stream {
 
   private def withOcc(df: DataFrame): DataFrame =
     // copies within a checksum are IDENTICAL rows, so any stable
-    // order yields the same multiset pairing (Scd2.withOcc posture)
+    // order yields the same multiset pairing (as in Scd2.updateSnapshot)
     df.withColumn("__occ", row_number().over(
       Window.partitionBy(col(Checksum)).orderBy(col(Checksum))))
 

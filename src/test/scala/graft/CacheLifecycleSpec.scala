@@ -85,14 +85,17 @@ class CacheLifecycleSpec extends SparkSpec {
     }
   }
 
+  private def d(s: String) = java.sql.Date.valueOf(s)
+  private lazy val obs = Seq((1L, d("2020-01-02"), Option(d("2020-01-04"))),
+    (2L, d("2020-01-03"), Option.empty[java.sql.Date]))
+    .toDF("key_p", "valid_from", "valid_until")
+  private def stratum(name: String, x: String, y: String) =
+    Seq((1L, x, d("2019-01-01"), Option.empty[java.sql.Date]),
+      (2L, y, d("2019-01-01"), Option.empty[java.sql.Date]))
+      .toDF("key_p", name, "valid_from", "valid_until")
+  private lazy val strat = stratum("grp", "x", "y")
+
   test("keyJoinFeatures with 0 and 1 strata leaves no cache behind") {
-    def d(s: String) = java.sql.Date.valueOf(s)
-    val obs = Seq((1L, d("2020-01-02"), Option(d("2020-01-04"))),
-      (2L, d("2020-01-03"), Option.empty[java.sql.Date]))
-      .toDF("key_p", "valid_from", "valid_until")
-    val strat = Seq((1L, "x", d("2019-01-01"), Option.empty[java.sql.Date]),
-      (2L, "y", d("2019-01-01"), Option.empty[java.sql.Date]))
-      .toDF("key_p", "grp", "valid_from", "valid_until")
     assertNoCacheLeak("keyJoinFeatures, no strata") {
       KeyJoinFeatures(obs, "n", "key_p", Aggregators.Count, Nil, Nil,
         "2020-01-01", "2020-01-05").count()
@@ -100,6 +103,22 @@ class CacheLifecycleSpec extends SparkSpec {
     assertNoCacheLeak("keyJoinFeatures, one stratum") {
       KeyJoinFeatures(obs, "n", "key_p", Aggregators.Count, Seq(strat),
         Seq("grp"), "2020-01-01", "2020-01-05").count()
+    }
+  }
+
+  test("keyJoinFeatures with 2 and 3 strata leaves no cache behind") {
+    // two strata go through Interlace.interlace, unlike 0 or 1
+    val strat2 = stratum("grp2", "u", "v")
+    val strat3 = stratum("grp3", "s", "t")
+    assertNoCacheLeak("keyJoinFeatures, two strata") {
+      KeyJoinFeatures(obs, "n", "key_p", Aggregators.Count,
+        Seq(strat, strat2), Seq("grp", "grp2"),
+        "2020-01-01", "2020-01-05").count()
+    }
+    assertNoCacheLeak("keyJoinFeatures, three strata") {
+      KeyJoinFeatures(obs, "n", "key_p", Aggregators.Count,
+        Seq(strat, strat2, strat3), Seq("grp", "grp2", "grp3"),
+        "2020-01-01", "2020-01-05").count()
     }
   }
 }

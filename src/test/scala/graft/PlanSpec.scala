@@ -72,6 +72,28 @@ class PlanSpec extends SparkSpec {
       s"the merge must shuffle exactly once:\n$plan")
   }
 
+  test("two-strata keyJoinFeatures interlaces in one shuffle, no cache") {
+    import org.apache.spark.sql.catalyst.plans.Inner
+    import org.apache.spark.sql.catalyst.plans.logical.Join
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
+    val df = SparkEntry.queries("q17_store_two_strat")(spark, dir)
+    val optimized = df.queryExecution.optimizedPlan
+    assert(!optimized.toString.contains("InMemoryRelation"),
+      s"interlace must not read a cache:\n$optimized")
+    // the two truncate joins; interlace itself joins nothing
+    assert(optimized.collect { case j: Join => j.joinType } == Seq(Inner, Inner),
+      s"only the two inner truncate joins are expected:\n$optimized")
+    df.collect()
+    // AQE-final plan: the interlace window, the delta aggregate and the
+    // series window
+    val shuffles = new AdaptiveSparkPlanHelper {}
+      .collect(df.queryExecution.executedPlan) {
+        case e: ShuffleExchangeLike => e }
+    assert(shuffles.size <= 3,
+      s"${shuffles.size} shuffles:\n${df.queryExecution.executedPlan}")
+  }
+
   test("truncate interlace joins stratification via broadcast hash join") {
     val plan = planOf(SparkEntry.queries("q08_prevalence_strat")(spark, dir))
     assert(plan.contains("BroadcastHashJoin"),

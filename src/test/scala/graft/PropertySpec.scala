@@ -179,4 +179,85 @@ class PropertySpec extends SparkSpec {
         }
     }
   }
+
+  test("interlace matches a per-key segment model") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    // day offsets; few keys, so rows of one table overlap within a key
+    case class R(key: Option[Long], pay: Seq[Option[String]],
+                 from: Option[Int], until: Option[Int])
+    def rowGen(nPay: Int): Gen[R] = for {
+      key <- Gen.frequency(6 -> Gen.choose(0L, 2L).map(Option(_)),
+        1 -> Gen.const(None))
+      pay <- Gen.listOfN(nPay, Gen.frequency(
+        5 -> Gen.choose(0, 9).map(i => Option(s"p$i")), 1 -> Gen.const(None)))
+      from <- Gen.frequency(9 -> Gen.choose(0, 12).map(Option(_)),
+        1 -> Gen.const(None))
+      // negative lengths are inverted intervals, zero is empty
+      until <- Gen.frequency(2 -> Gen.const(None),
+        8 -> Gen.choose(-3, 6).map(l => Option(from.getOrElse(6) + l)))
+    } yield R(key, pay, from, until)
+    // "v" is shared by the first two tables; the third has no payload
+    val names = Seq(Seq("v", "a"), Seq("v", "b"), Seq.empty[String])
+    val tablesGen = Gen.choose(2, 3).flatMap(n => Gen.sequence[Seq[Seq[R]], Seq[R]](
+      names.take(n).map(ns => Gen.choose(0, 10)
+        .flatMap(Gen.listOfN(_, rowGen(ns.size))))))
+    def day(i: Int) = java.sql.Date.valueOf(start.plusDays(i))
+    def offset(d: java.sql.Date) =
+      java.time.temporal.ChronoUnit.DAYS.between(start, d.toLocalDate).toInt
+
+    type Out = (Option[Long], Seq[Option[String]], Option[Int], Option[Int])
+    // today's semantics: per key, segments between consecutive distinct
+    // non-NULL breakpoints; per table, the rows valid at the segment
+    // start; one output row per combination, NULL for a table with none
+    def model(tabs: Seq[Seq[R]]): Seq[Out] = {
+      val outNames = names.take(tabs.size).flatten.distinct
+      tabs.flatten.map(_.key).distinct.flatMap { k =>
+        val byTab = tabs.map(_.filter(_.key == k))
+        val points = byTab.flatten.flatMap(r => r.from.toSeq ++ r.until)
+          .distinct.sorted
+        points.zip(points.tail.map(Option(_)) :+ None).flatMap {
+          case (s, u) =>
+            val valid = byTab.map(_.filter(r =>
+              r.from.exists(_ <= s) && r.until.forall(_ > s)))
+            if (valid.forall(_.isEmpty)) Nil
+            else valid.map(v => if (v.isEmpty) Seq(None) else v.map(Option(_)))
+              .foldLeft(Seq(Seq.empty[Option[R]]))((acc, opts) =>
+                for (a <- acc; o <- opts) yield a :+ o)
+              .map { combo =>
+                val pays = outNames.map(c => combo.indices.flatMap { i =>
+                  val j = names(i).indexOf(c)
+                  if (j < 0) None else combo(i).flatMap(_.pay(j))
+                }.headOption)
+                (k, pays, Option(s), u)
+              }
+        }
+      }
+    }
+
+    forSeeds(tablesGen, 16) { tabs =>
+      val dfs = tabs.zip(names).map { case (rs, ns) =>
+        val schema = StructType(
+          StructField("key_k", LongType) +: ns.map(StructField(_, StringType)) :+
+            StructField("valid_from", DateType) :+
+            StructField("valid_until", DateType))
+        spark.createDataFrame(java.util.Arrays.asList(rs.map(r => Row.fromSeq(
+          r.key.getOrElse(null) +: r.pay.map(_.orNull) :+
+            r.from.map(day).orNull :+ r.until.map(day).orNull)): _*), schema)
+      }
+      val out = Interlace.interlace(dfs, Seq("key_k"))
+      val outNames = names.take(tabs.size).flatten.distinct
+      assert(out.schema.map(f => f.name -> f.dataType) ==
+        (("key_k" -> LongType) +: outNames.map(_ -> StringType)) ++
+          Seq("valid_from" -> DateType, "valid_until" -> DateType))
+      val got: Seq[Out] = out.collect().toSeq.map { r =>
+        (Option(r.get(0)).map(_.asInstanceOf[Long]),
+          outNames.indices.map(i => Option(r.getString(i + 1))),
+          Option(r.getDate(outNames.size + 1)).map(offset),
+          Option(r.getDate(outNames.size + 2)).map(offset))
+      }
+      def key(o: Out) = o.toString
+      assert(got.sortBy(key) == model(tabs).sortBy(key), s"tables $tabs")
+    }
+  }
 }
