@@ -43,8 +43,6 @@ object Intervals {
       .withColumn(ValidUntil, least(coalesce(col(ValidUntil), e), e))
   }
 
-  /** Two intervals overlap (strictly; empty intersections excluded),
-    * open ends (NULL) treated as +infinity. */
   /** Merge overlapping/touching validity intervals per key (interval
     * UNION — gaps-and-islands): `[a,b) ∪ [b,c) = [a,c)`. One shuffle on
     * the keys; islands found with a running max-end window, no
@@ -139,6 +137,8 @@ object Intervals {
     mergePerKey(seg.filter(keep).select(kc ++ iv: _*), keys)
   }
 
+  /** Two intervals overlap (strictly; empty intersections excluded),
+    * open ends (NULL) treated as +infinity. */
   def intervalsOverlap(
       from1: Column, until1: Column, from2: Column, until2: Column): Column =
     (from1 < until2 || until2.isNull) && (until1 > from2 || until1.isNull)

@@ -1488,14 +1488,15 @@ object StoreCatalog {
             .foreach(sfx =>
             fs.delete(new Path(s"$storePath/$t$sfx"), true))
         }
+        // the scrubbed log is published like backupTo's copy: both
+        // renames checked, the previous log parked until the new one
+        // is in place
         val logP = new Path(s"$storePath/logs")
         if (fs.exists(logP) && victims.nonEmpty) {
           val logs = spark.read.parquet(logP.toString)
             .filter(!col("table").isin(victims: _*))
-          val tmp = new Path(s"$storePath/logs.tmp")
-          logs.write.mode("overwrite").parquet(tmp.toString)
-          fs.delete(logP, true)
-          fs.rename(tmp, logP)
+          Committer.Rename.publish(fs, logP,
+            tmp => logs.write.mode("overwrite").parquet(tmp))
         }
     }
   }

@@ -98,24 +98,6 @@ object Graph {
           .otherwise(lit(0L)))
   }
 
-  /** Integer fixed-point HITS (Kleinberg 1999): `iters` rounds of
-    * auth(v) = Σ hub(in-neighbors), hub(u) = Σ auth(out-neighbors),
-    * each renormalized to sum ≈ `scale` by floored integer division
-    * after every half-step — so every intermediate is a 64-bit integer
-    * and the whole iteration hash-checks against a recursive CTE.
-    * Output: (node, hub, auth) over all endpoint nodes.
-    *
-    * Scale: edges repartition by src once and checkpoint; each round
-    * is two co-located joins + two keyed aggregates (the PageRank
-    * posture, twice per round). The normalizing totals are 1-row
-    * aggregates broadcast back — never a collect, never a window over
-    * node rows. Overflow: normalized values sum to ≤ scale, a raw
-    * half-step value is ≤ scale·dmax, and the normalization product is
-    * ≤ scale²·dmax — so the EFFECTIVE scale is auto-derived as the
-    * largest s ≤ `scale` with s²·dmax ≤ 2⁶³−1 ([[hitsScale]]): a
-    * web-scale hub degrades fixed-point precision instead of refusing
-    * to run (ANSI mode would otherwise throw mid-task on overflow).
-    */
   /** Effective HITS fixed-point scale: the largest s ≤ `scale` with
     * s²·dmax ≤ 2⁶³−1, so the normalization product `raw · s` (raw ≤
     * s·dmax) can never overflow a long. Exact-integer adjusted from a
@@ -141,30 +123,35 @@ object Graph {
     * collected pass; see the commit-recorded before/after numbers. */
   private[graft] val IterDriverFinishMaxEdges = 2L * 1000 * 1000
 
+  /** Integer fixed-point HITS (Kleinberg 1999): `iters` rounds of
+    * auth(v) = Σ hub(in-neighbors), hub(u) = Σ auth(out-neighbors),
+    * each renormalized to sum ≈ `scale` by floored integer division
+    * after every half-step — so every intermediate is a 64-bit integer
+    * and the whole iteration hash-checks against a recursive CTE.
+    * Output: (node, hub, auth) over all endpoint nodes.
+    *
+    * Scale: edges repartition by src once and checkpoint; each round
+    * is two co-located joins + two keyed aggregates (the PageRank
+    * posture, twice per round). The normalizing totals are 1-row
+    * aggregates broadcast back — never a collect, never a window over
+    * node rows. Overflow: normalized values sum to ≤ scale, a raw
+    * half-step value is ≤ scale·dmax, and the normalization product is
+    * ≤ scale²·dmax — so the EFFECTIVE scale is auto-derived as the
+    * largest s ≤ `scale` with s²·dmax ≤ 2⁶³−1 ([[hitsScale]]): a
+    * web-scale hub degrades fixed-point precision instead of refusing
+    * to run (ANSI mode would otherwise throw mid-task on overflow).
+    */
   def hits(edges: DataFrame, srcCol: String, dstCol: String,
            iters: Int, scale: Long = 1000000L,
            driverFinishMaxEdges: Long = IterDriverFinishMaxEdges)
       : DataFrame = {
     require(iters >= 0, "iters must be non-negative")
     require(scale > 0, "scale must be positive")
-    // dedup (one exchange, map-side partial dedup) → co-locate by
-    // __src → ONE checkpoint, with the driver-finish bound count
-    // observed on the materialization job (r18, guide §2.4; r17
-    // verdict item 3 — the r17 shape wrote and read the edge set
-    // TWICE above the bound and paid a separate count job besides)
-    val (e, nEdges) = Materialize.ckRepartitionCount(
-      edges.select(col(srcCol).cast("long").as("__src"),
-          col(dstCol).cast("long").as("__dst"))
-        .filter(col("__src").isNotNull && col("__dst").isNotNull)
-        .distinct(),
-      col("__src"))
+    val (e, nEdges) = dedupEdges(edges, srcCol, dstCol)
     if (driverFinishMaxEdges > 0 && nEdges <= driverFinishMaxEdges)
       return hitsDriver(e, iters, scale)
-    val nodes = e.select(col("__src").as("node"))
-      .union(e.select(col("__dst")))
-      .distinct()
-      .localCheckpoint(true)
-    require(nodes.count() > 0, "empty edge set")
+    val (nodes, n) = Materialize.ckCount(nodesOf(e))
+    require(n > 0, "empty edge set")
     val dmax = e.select(col("__src").as("n"))
       .union(e.select(col("__dst")))
       .groupBy(col("n")).agg(count(lit(1)).as("d"))
@@ -349,80 +336,28 @@ object Graph {
     * TrustRank scores proximity continuously, this reports the exact
     * hop radius (e.g. "every doc within 2 links of a seed list").
     *
-    * Scale: frontier expansion, not per-round full relaxation — round
-    * h joins ONLY the hop-(h−1) frontier against the src-repartitioned
-    * edge frame (co-located), dedupes the successor set, and anti-joins
-    * the settled set, so each round's cost is proportional to the
-    * frontier and the settled set is append-only with O(1) lineage via
-    * per-round localCheckpoint. Early-exits when a frontier is empty,
-    * so maxHops only bounds the diameter walked. Ghost seeds (ids
-    * absent from the edge set) are dropped, as in TrustRank. */
+    * Scale: frontier expansion ([[frontierBfs]]), not per-round full
+    * relaxation — each round's cost is proportional to the frontier,
+    * and an empty frontier ends the loop, so maxHops only bounds the
+    * diameter walked. Ghost seeds (ids absent from the edge set) are
+    * dropped, as in TrustRank. */
   def bfsDistance(edges: DataFrame, srcCol: String, dstCol: String,
                   seeds: DataFrame, seedCol: String, maxHops: Int,
                   driverFinishMaxEdges: Long = IterDriverFinishMaxEdges)
       : DataFrame = {
     require(maxHops >= 0, "maxHops must be non-negative")
-    // dedup → co-locate by __src → ONE checkpoint; every consumer
-    // (nodes, the driver collect, the round loop) reads it, and the
-    // driver-finish bound count rides the materialization job (r18,
-    // guide §2.4 — single edge materialization on every branch)
-    val (e, nEdges) = Materialize.ckRepartitionCount(
-      edges.select(col(srcCol).cast("long").as("__src"),
-          col(dstCol).cast("long").as("__dst"))
-        .filter(col("__src").isNotNull && col("__dst").isNotNull)
-        .distinct(),
-      col("__src"))
-    val nodes = e.select(col("__src").as("node"))
-      .union(e.select(col("__dst")))
-      .distinct()
-    var settled = seeds.select(col(seedCol).cast("long").as("node"))
-      .filter(col("node").isNotNull)
-      .distinct()
-      .join(nodes, Seq("node"), "left_semi")
-      .withColumn("hops", lit(0L))
-      .localCheckpoint(true)
+    val (e, nEdges) = dedupEdges(edges, srcCol, dstCol)
+    val sources = graphSeeds(seeds, seedCol, e, "node")
     // driver finish: per hop one linear adjacency sweep
     if (driverFinishMaxEdges > 0 && nEdges <= driverFinishMaxEdges) {
       val spark = e.sparkSession
       import spark.implicits._
-      val adj = collectAdj(e)
-      val dist = new java.util.HashMap[Long, Long]()
-      var frontier0 = settled.select(col("node")).as[Long].collect().toSeq
-      frontier0.foreach(s => dist.put(s, 0L))
-      var hop = 1L
-      while (hop <= maxHops && frontier0.nonEmpty) {
-        val next = mutable.ArrayBuffer.empty[Long]
-        frontier0.foreach { v =>
-          val ns = adj.get(v)
-          if (ns != null) ns.foreach { w =>
-            if (!dist.containsKey(w)) { dist.put(w, hop); next += w }
-          }
-        }
-        frontier0 = next.toSeq
-        hop += 1
-      }
       import scala.jdk.CollectionConverters._
-      return dist.asScala.toSeq.map { case (n, h) => (n, h) }
+      return driverBfs(collectAdj(e), sources.as[Long].collect().toSeq,
+          maxHops).asScala.toSeq.map { case (n, h) => (n, h) }
         .toDF("node", "hops")
     }
-    var frontier = settled
-    var hop = 1
-    var drained = frontier.isEmpty
-    while (hop <= maxHops && !drained) {
-      // the frontier count rides the checkpoint job (r18): the old
-      // isEmpty() was one more action per round of pure job floor
-      val (next, nNext) = Materialize.ckCount(
-        e.join(frontier.withColumnRenamed("node", "__src"), Seq("__src"))
-          .select(col("__dst").as("node"))
-          .distinct()
-          .join(settled, Seq("node"), "left_anti")
-          .withColumn("hops", lit(hop.toLong)))
-      drained = nNext == 0
-      if (!drained) settled = settled.union(next).localCheckpoint(true)
-      frontier = next
-      hop += 1
-    }
-    settled
+    frontierBfs(e, sources, Seq(), maxHops)
   }
 
   /** Hop-bounded weighted shortest paths from a seed set: after
@@ -462,13 +397,7 @@ object Graph {
     val nEdges = met("__n").asInstanceOf[Long]
     require(met("__mnw") == null || met("__mnw").asInstanceOf[Long] >= 0,
       "edge weights must be non-negative")
-    val nodes = e.select(col("__src").as("node"))
-      .union(e.select(col("__dst")))
-      .distinct()
-    var dist = seeds.select(col(seedCol).cast("long").as("node"))
-      .filter(col("node").isNotNull)
-      .distinct()
-      .join(nodes, Seq("node"), "left_semi")
+    var dist = graphSeeds(seeds, seedCol, e, "node")
       .withColumn("dist", lit(0L))
       .localCheckpoint(true)
     // driver finish: synchronous Bellman-Ford rounds (dist_k reads
@@ -556,24 +485,10 @@ object Graph {
                          driverFinishMaxWork: Long =
                            BetweennessDriverMaxWork): DataFrame = {
     require(maxHops >= 0, "maxHops must be non-negative")
-    // dedup → co-locate by __src → ONE checkpoint; the work-bound edge
-    // count rides the materialization job (r18, guide §2.4)
-    val (e, nEdges) = Materialize.ckRepartitionCount(
-      edges.select(col(srcCol).cast("long").as("__src"),
-          col(dstCol).cast("long").as("__dst"))
-        .filter(col("__src").isNotNull && col("__dst").isNotNull)
-        .distinct(),
-      col("__src"))
-    val nodes = e.select(col("__src").as("node"))
-      .union(e.select(col("__dst")))
-      .distinct()
-    // counted for the guard + BFS layer 0 — count rides the checkpoint
-    val (seedFrame, nSeeds) = Materialize.ckCount(
-      seeds.select(col(seedCol).cast("long").as("__seed"))
-        .filter(col("__seed").isNotNull)
-        .distinct()
-        .join(nodes.withColumnRenamed("node", "__seed"), Seq("__seed"),
-          "left_semi"))
+    val (e, nEdges) = dedupEdges(edges, srcCol, dstCol)
+    // counted for the guard — the count rides the checkpoint job
+    val (seedFrame, nSeeds) =
+      Materialize.ckCount(graphSeeds(seeds, seedCol, e, "__seed"))
     require(nSeeds <= maxSeeds,
       s"closenessFromSeeds: $nSeeds seeds (> maxSeeds=$maxSeeds) — " +
         "frontier state is seeds × nodes; shrink the panel or raise " +
@@ -584,26 +499,9 @@ object Graph {
       val spark = e.sparkSession
       import spark.implicits._
       val adj = collectAdj(e)
-      val seedIds = seedFrame.as[Long].collect()
-      val perSeed = seedIds.toSeq.map { s =>
-        java.util.concurrent.CompletableFuture.supplyAsync(() => {
-          val dist = new java.util.HashMap[Long, Long]()
-          dist.put(s, 0L)
-          var frontier0: Seq[Long] = Seq(s)
-          var hop = 1L
-          while (hop <= maxHops && frontier0.nonEmpty) {
-            val next = mutable.ArrayBuffer.empty[Long]
-            frontier0.foreach { v =>
-              val ns = adj.get(v)
-              if (ns != null) ns.foreach { w =>
-                if (!dist.containsKey(w)) { dist.put(w, hop); next += w }
-              }
-            }
-            frontier0 = next.toSeq
-            hop += 1
-          }
-          dist
-        })
+      val perSeed = seedFrame.as[Long].collect().toSeq.map { s =>
+        java.util.concurrent.CompletableFuture.supplyAsync(() =>
+          driverBfs(adj, Seq(s), maxHops))
       }
       val nReached = new java.util.HashMap[Long, Long]()
       val sumHops = new java.util.HashMap[Long, Long]()
@@ -620,27 +518,9 @@ object Graph {
         (n, c, sumHops.get(n): Long, harmonic.get(n): Long)
       }.toDF("node", "n_reached", "sum_hops", "harmonic_fp")
     }
-    var settled = seedFrame
-      .select(col("__seed"), col("__seed").as("node"))
-      .withColumn("hops", lit(0L))
-      .localCheckpoint(true)
-    var frontier = settled
-    var hop = 1
-    var drained = frontier.isEmpty
-    while (hop <= maxHops && !drained) {
-      // frontier count rides the checkpoint job (r18)
-      val (next, nNext) = Materialize.ckCount(
-        e.join(frontier.withColumnRenamed("node", "__src"),
-            Seq("__src"))
-          .select(col("__seed"), col("__dst").as("node"))
-          .distinct()
-          .join(settled, Seq("__seed", "node"), "left_anti")
-          .withColumn("hops", lit(hop.toLong)))
-      drained = nNext == 0
-      if (!drained) settled = settled.union(next).localCheckpoint(true)
-      frontier = next
-      hop += 1
-    }
+    val settled = frontierBfs(e,
+      seedFrame.select(col("__seed"), col("__seed").as("node")),
+      Seq("__seed"), maxHops)
     settled.groupBy(col("node"))
       .agg(count(lit(1)).as("n_reached"),
         sum(col("hops")).as("sum_hops"),
@@ -681,23 +561,9 @@ object Graph {
                            driverFinishMaxWork: Long =
                              BetweennessDriverMaxWork): DataFrame = {
     require(maxHops >= 1, "maxHops must be >= 1")
-    // dedup → co-locate by __src → ONE checkpoint; the work-bound edge
-    // count rides the materialization job (r18, guide §2.4)
-    val (e, nEdges) = Materialize.ckRepartitionCount(
-      edges.select(col(srcCol).cast("long").as("__src"),
-          col(dstCol).cast("long").as("__dst"))
-        .filter(col("__src").isNotNull && col("__dst").isNotNull)
-        .distinct(),
-      col("__src"))
-    val nodes = e.select(col("__src").as("node"))
-      .union(e.select(col("__dst")))
-      .distinct()
-    val (seedFrame, nSeeds) = Materialize.ckCount(
-      seeds.select(col(seedCol).cast("long").as("__seed"))
-        .filter(col("__seed").isNotNull)
-        .distinct()
-        .join(nodes.withColumnRenamed("node", "__seed"), Seq("__seed"),
-          "left_semi"))
+    val (e, nEdges) = dedupEdges(edges, srcCol, dstCol)
+    val (seedFrame, nSeeds) =
+      Materialize.ckCount(graphSeeds(seeds, seedCol, e, "__seed"))
     require(nSeeds <= maxSeeds,
       s"betweennessFromSeeds: $nSeeds seeds (> maxSeeds=$maxSeeds) — " +
         "BFS-DAG state is seeds × nodes; shrink the panel or raise " +
@@ -773,6 +639,93 @@ object Graph {
       .agg(expr("cast(sum(__delta) as long)").as("bc_fp"))
   }
 
+  /** Edge prep of the seeded-BFS family ([[hits]], [[bfsDistance]],
+    * [[closenessFromSeeds]], [[betweennessFromSeeds]]): non-null
+    * distinct directed edges (one exchange, map-side partial dedup) →
+    * co-locate by __src → ONE checkpoint; every consumer (nodes, the
+    * driver collect, the round loop) reads it, and the driver-finish
+    * bound count rides the materialization job (r18, guide §2.4). */
+  private def dedupEdges(edges: DataFrame, srcCol: String, dstCol: String)
+      : (DataFrame, Long) =
+    Materialize.ckRepartitionCount(
+      edges.select(col(srcCol).cast("long").as("__src"),
+          col(dstCol).cast("long").as("__dst"))
+        .filter(col("__src").isNotNull && col("__dst").isNotNull)
+        .distinct(),
+      col("__src"))
+
+  /** Distinct endpoint ids of an (__src, __dst) edge frame, as
+    * `node`. */
+  private[operators] def nodesOf(e: DataFrame): DataFrame =
+    e.select(col("__src").as("node"))
+      .union(e.select(col("__dst")))
+      .distinct()
+
+  /** The distinct non-null seed ids that occur in the edge frame, in
+    * one column named `name`: ghost seeds are dropped. */
+  private def graphSeeds(seeds: DataFrame, seedCol: String,
+                         e: DataFrame, name: String): DataFrame =
+    seeds.select(col(seedCol).cast("long").as(name))
+      .filter(col(name).isNotNull)
+      .distinct()
+      .join(nodesOf(e).withColumnRenamed("node", name), Seq(name),
+        "left_semi")
+
+  /** Driver twin of [[frontierBfs]]: hop distance ≤ `maxHops` from
+    * the nearest of `sources` (at 0), one linear adjacency sweep per
+    * hop. */
+  private def driverBfs(
+      adj: java.util.HashMap[Long, mutable.ArrayBuffer[Long]],
+      sources: Seq[Long], maxHops: Int): java.util.HashMap[Long, Long] = {
+    val dist = new java.util.HashMap[Long, Long]()
+    sources.foreach(s => dist.put(s, 0L))
+    var frontier = sources
+    var hop = 1L
+    while (hop <= maxHops && frontier.nonEmpty) {
+      val next = mutable.ArrayBuffer.empty[Long]
+      frontier.foreach { v =>
+        val ns = adj.get(v)
+        if (ns != null) ns.foreach { w =>
+          if (!dist.containsKey(w)) { dist.put(w, hop); next += w }
+        }
+      }
+      frontier = next.toSeq
+      hop += 1
+    }
+    dist
+  }
+
+  /** Distributed BFS frontier loop shared by [[bfsDistance]] and
+    * [[closenessFromSeeds]]. `sources` holds the `carry` columns plus
+    * `node`; the output adds `hops` and holds every (carry, node)
+    * reached within `maxHops`, each at its minimum hop count. Round h
+    * joins ONLY the hop-(h−1) frontier against the src-partitioned
+    * edges (co-located), dedupes the successors and anti-joins the
+    * settled set on (carry, node); the settled set is append-only with
+    * O(1) lineage via per-round localCheckpoint, and the frontier
+    * count rides each checkpoint job (r18). Exits early on an empty
+    * frontier. */
+  private def frontierBfs(e: DataFrame, sources: DataFrame,
+                          carry: Seq[String], maxHops: Int): DataFrame = {
+    var (settled, n) =
+      Materialize.ckCount(sources.withColumn("hops", lit(0L)))
+    var frontier = settled
+    var hop = 1
+    while (hop <= maxHops && n > 0) {
+      val (next, nNext) = Materialize.ckCount(
+        e.join(frontier.withColumnRenamed("node", "__src"), Seq("__src"))
+          .select(carry.map(col) :+ col("__dst").as("node"): _*)
+          .distinct()
+          .join(settled, carry :+ "node", "left_anti")
+          .withColumn("hops", lit(hop.toLong)))
+      n = nNext
+      if (n > 0) settled = settled.union(next).localCheckpoint(true)
+      frontier = next
+      hop += 1
+    }
+    settled
+  }
+
   /** Shared driver-finish helper: collect distinct directed edges
     * into an adjacency map. */
   private def collectAdj(e: DataFrame)
@@ -806,12 +759,7 @@ object Graph {
                                 maxHops: Int, scale: Long): DataFrame = {
     val spark = e.sparkSession
     import spark.implicits._
-    val es = e.select(col("__src"), col("__dst"))
-      .as[(Long, Long)].collect()
-    val adj = new java.util.HashMap[Long, mutable.ArrayBuffer[Long]]()
-    es.foreach { case (s, d) =>
-      adj.computeIfAbsent(s, _ => mutable.ArrayBuffer.empty) += d
-    }
+    val adj = collectAdj(e)
     // seeds are independent — fan them out on the driver's pool and
     // merge (BigInt sums commute exactly, so the merge order is
     // irrelevant to the result)
@@ -897,7 +845,7 @@ object Graph {
     * 5.13 s → 1.07 s with the driver finish. r16 measured q133_kcore
     * (~800k edges) WORSE when collected (4.86 → 5.64 s) and set 128k;
     * that sample was contention-era. Re-measured r18 on a quiet
-    * machine (KcoreScaleBench driver-vs-distributed, fresh JVM per
+    * machine (`ScaleBench kcore` driver-vs-distributed, fresh JVM per
     * leg, digests equal, 8-round skewed peel): 512k edges 5.14 vs
     * 8.32 s, 768k 4.42 vs 8.08 s, 1M 5.22 vs 9.14 s, 1.5M 7.04 vs
     * 10.62 s — the driver wins ~1.5-1.8x across the whole range even

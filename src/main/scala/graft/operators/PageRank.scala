@@ -19,6 +19,18 @@ import org.apache.spark.sql.functions._
   * 64-bit integer computed identically by any engine, so the whole
   * iteration hash-checks against a DuckDB recursive CTE.
   *
+  * One recurrence, two twins: every variant is the same integer
+  * power iteration over edges with a weight `w` (1 unless weighted),
+  * a per-node teleport flag (1 on every node unless personalized) and
+  * start ranks `coalesce(warm, flag · (scale div denom))`, where
+  * `denom = Σ flags`. Per round, node v gets `flag_v · base + Σ over
+  * in-edges (u,v) of ((rank_u · dampBp div 10⁴) · w) div W_u`, with
+  * `W_u` = u's out-weight and `base = scale·(10⁴ − dampBp) div 10⁴
+  * div denom`. Unit weights reproduce the unweighted integers exactly
+  * (`(x·1) div count ≡ x div count`). [[iterateDriver]] replays it in
+  * memory below the driver-finish bound; [[iterateDistributed]] runs
+  * it as DataFrame joins above it.
+  *
   * Scale: edges are repartitioned by src ONCE and checkpointed; each
   * iteration is one src-keyed join (co-located with the edge
   * partitioning) plus one dst-keyed partial aggregate — the canonical
@@ -31,15 +43,40 @@ import org.apache.spark.sql.functions._
   * by total mass. */
 object PageRank {
 
-  /** Shared driver replay of the power-iteration recurrences — the
-    * graph-family driver finish for [[iterate]] / [[resume]] /
-    * [[iterateWeighted]] / [[personalized]]: identical integer
-    * arithmetic (every product bounded exactly as the distributed
-    * REQUIREs bound it, every division non-negative so `/` ≡ `div`),
-    * so the rank sequence is bit-equal. `e` must carry __src/__dst
-    * (and __w for the weighted variant); `warm` = resume's published
-    * ranks; `seeded` = personalized's (node, __seed) flag frame
-    * (node-sized — never the raw seed table). */
+  /** The argument check shared by the four entry points. */
+  private def checkArgs(iters: Int, dampBp: Long, scale: Long): Unit = {
+    require(iters >= 0, "iters must be non-negative")
+    require(dampBp >= 0 && dampBp <= 10000, "dampBp in [0, 10000]")
+    require(scale > 0 && scale <= 1000000000000L,
+      "scale in (0, 10^12] keeps damped products within a long")
+  }
+
+  /** Edge prep of the unweighted variants: projection → co-locate by
+    * __src → ONE checkpoint, the bound count observed on the
+    * materialization job (r18, guide §2.4). Parallel rows stay as
+    * multi-edges. */
+  private def prep(edges: DataFrame, srcCol: String, dstCol: String)
+      : (DataFrame, Long) =
+    Materialize.ckRepartitionCount(
+      edges.select(col(srcCol).cast("long").as("__src"),
+        col(dstCol).cast("long").as("__dst")),
+      col("__src"))
+
+  /** The driver-or-distributed branch of the four entry points. */
+  private def run(e: DataFrame, nEdges: Long, warm: Option[DataFrame],
+                  seeded: Option[DataFrame], iters: Int, dampBp: Long,
+                  scale: Long, driverFinishMaxEdges: Long): DataFrame =
+    if (driverFinishMaxEdges > 0 && nEdges <= driverFinishMaxEdges)
+      iterateDriver(e, warm, seeded, iters, dampBp, scale)
+    else iterateDistributed(e, warm, seeded, iters, dampBp, scale)
+
+  /** Driver twin of the recurrence: identical integer arithmetic
+    * (every product bounded exactly as the entry points' REQUIREs
+    * bound it, every division non-negative so `/` ≡ `div`), so the
+    * rank sequence is bit-equal to [[iterateDistributed]]'s. `e` must
+    * carry __src/__dst (and __w for the weighted variant); `warm` =
+    * resume's published ranks; `seeded` = personalized's (node,
+    * __seed) flag frame (node-sized — never the raw seed table). */
   private def iterateDriver(e: DataFrame, warm: Option[DataFrame],
                             seeded: Option[DataFrame], iters: Int,
                             dampBp: Long, scale: Long): DataFrame = {
@@ -62,26 +99,18 @@ object PageRank {
     seeded.foreach(_.select(col("node"), col("__seed"))
       .as[(Long, Long)].collect()
       .foreach { case (k, f) => flags.put(k, f) })
+    def flag(n: Long): Long =
+      if (seeded.isEmpty) 1L else flags.getOrDefault(n, 0L)
     val warmRanks = new java.util.HashMap[Long, Long]()
     warm.foreach(_.select(col("node"), col("rank"))
       .as[(Long, Long)].collect()
       .foreach { case (k, r) => warmRanks.put(k, r) })
-    val personalizedMode = seeded.isDefined
-    var denom = nodes.length.toLong
-    if (personalizedMode) {
-      denom = 0L
-      nodes.foreach(n => denom += flags.getOrDefault(n, 0L))
-      require(denom > 0, "no seed id appears in the edge set")
-    }
+    val denom = nodes.map(flag).sum
+    require(denom > 0, "no seed id appears in the edge set")
     val base = scale * (10000L - dampBp) / 10000L / denom
-    val uniform = scale / denom
     var ranks = new java.util.HashMap[Long, Long]()
     nodes.foreach { n =>
-      val r =
-        if (personalizedMode) flags.getOrDefault(n, 0L) * uniform
-        else if (warmRanks.containsKey(n)) warmRanks.get(n)
-        else uniform
-      ranks.put(n, r)
+      ranks.put(n, warmRanks.getOrDefault(n, flag(n) * (scale / denom)))
     }
     for (_ <- 0 until iters) {
       val sums = new java.util.HashMap[Long, Long]()
@@ -91,14 +120,56 @@ object PageRank {
       }
       val next = new java.util.HashMap[Long, Long]()
       nodes.foreach { n =>
-        val b =
-          if (personalizedMode) flags.getOrDefault(n, 0L) * base
-          else base
-        next.put(n, b + sums.getOrDefault(n, 0L))
+        next.put(n, flag(n) * base + sums.getOrDefault(n, 0L))
       }
       ranks = next
     }
     nodes.toSeq.map(n => (n, ranks.get(n): Long)).toDF("node", "rank")
+  }
+
+  /** Distributed twin of the recurrence, same inputs as
+    * [[iterateDriver]]: the node frame carries the teleport flag
+    * (every node 1 unless `seeded` is given) and is materialized with
+    * its count and flag sum observed on the same job. Each round is
+    * one join of the src-partitioned edges against the ranks and the
+    * out-weights plus one dst-keyed aggregate. */
+  private def iterateDistributed(e: DataFrame, warm: Option[DataFrame],
+                                 seeded: Option[DataFrame], iters: Int,
+                                 dampBp: Long, scale: Long): DataFrame = {
+    val we =
+      if (e.columns.contains("__w")) e else e.withColumn("__w", lit(1L))
+    val (nodes, met) = Materialize.ckObserve(
+      seeded.getOrElse(Graph.nodesOf(e).withColumn("__seed", lit(1L))),
+      Seq(count(lit(1)).as("__n"), sum(col("__seed")).as("__ns")))
+    require(met("__n").asInstanceOf[Long] > 0, "empty edge set")
+    val denom = met("__ns").asInstanceOf[Long]
+    require(denom > 0, "no seed id appears in the edge set")
+    // NOTE: __W would collide with __w under case-insensitive
+    // resolution — keep the name fully distinct
+    val outw = we.groupBy(col("__src")).agg(sum(col("__w")).as("__wsum"))
+      .localCheckpoint(true)
+    val base = scale * (10000L - dampBp) / 10000L / denom
+    // nodes new since the published ranks start at their uniform share
+    val start = col("__seed") * lit(scale / denom)
+    var ranks = warm.fold(nodes.select(col("node"), start.as("rank")))(w =>
+      nodes.join(w.select(col("node"), col("rank").as("__warm")),
+          Seq("node"), "left")
+        .select(col("node"), coalesce(col("__warm"), start).as("rank")))
+    for (_ <- 0 until iters) {
+      val contribs = we
+        .join(ranks.withColumnRenamed("node", "__src"), Seq("__src"))
+        .join(outw, Seq("__src"))
+        .select(col("__dst").as("node"),
+          expr(s"((rank * ${dampBp}L div 10000L) * __w) div __wsum")
+            .as("__c"))
+        .groupBy(col("node")).agg(sum(col("__c")).as("__s"))
+      ranks = nodes.join(contribs, Seq("node"), "left")
+        .select(col("node"),
+          (col("__seed") * lit(base) +
+            coalesce(col("__s"), lit(0L))).as("rank"))
+        .localCheckpoint(true)
+    }
+    ranks
   }
 
   /** Run `iters` damped power-iteration rounds over `edges` (one row
@@ -113,42 +184,9 @@ object PageRank {
               scale: Long = 1000000000000L,
               driverFinishMaxEdges: Long = Graph.IterDriverFinishMaxEdges)
       : DataFrame = {
-    require(iters >= 0, "iters must be non-negative")
-    require(dampBp >= 0 && dampBp <= 10000, "dampBp in [0, 10000]")
-    require(scale > 0 && scale <= 1000000000000L,
-      "scale in (0, 10^12] keeps damped products within a long")
-    // projection -> co-locate by __src -> ONE checkpoint, bound count
-    // observed on the materialization job (r18, guide §2.4; r17 wrote
-    // and read the edge list twice above the bound + a count job)
-    val (e, nEdges) = Materialize.ckRepartitionCount(
-      edges.select(col(srcCol).cast("long").as("__src"),
-        col(dstCol).cast("long").as("__dst")),
-      col("__src"))
-    if (driverFinishMaxEdges > 0 && nEdges <= driverFinishMaxEdges)
-      return iterateDriver(e, None, None, iters, dampBp, scale)
-    val nodes = e.select(col("__src").as("node"))
-      .union(e.select(col("__dst")))
-      .distinct()
-      .localCheckpoint(true)
-    val n = nodes.count()
-    require(n > 0, "empty edge set")
-    val outdeg = e.groupBy(col("__src")).agg(count(lit(1)).as("__od"))
-      .localCheckpoint(true)
-    val base = scale * (10000L - dampBp) / 10000L / n
-    var ranks = nodes.withColumn("rank", lit(scale / n))
-    for (_ <- 0 until iters) {
-      val contribs = e
-        .join(ranks.withColumnRenamed("node", "__src"), Seq("__src"))
-        .join(outdeg, Seq("__src"))
-        .select(col("__dst").as("node"),
-          expr(s"(rank * ${dampBp}L div 10000L) div __od").as("__c"))
-        .groupBy(col("node")).agg(sum(col("__c")).as("__s"))
-      ranks = nodes.join(contribs, Seq("node"), "left")
-        .select(col("node"),
-          (lit(base) + coalesce(col("__s"), lit(0L))).as("rank"))
-        .localCheckpoint(true)
-    }
-    ranks
+    checkArgs(iters, dampBp, scale)
+    val (e, nEdges) = prep(edges, srcCol, dstCol)
+    run(e, nEdges, None, None, iters, dampBp, scale, driverFinishMaxEdges)
   }
 
   /** Warm-start continuation: run `iters` more rounds starting from
@@ -164,44 +202,10 @@ object PageRank {
              scale: Long = 1000000000000L,
              driverFinishMaxEdges: Long = Graph.IterDriverFinishMaxEdges)
       : DataFrame = {
-    require(iters >= 0, "iters must be non-negative")
-    require(dampBp >= 0 && dampBp <= 10000, "dampBp in [0, 10000]")
-    require(scale > 0 && scale <= 1000000000000L,
-      "scale in (0, 10^12] keeps damped products within a long")
-    val (e, nEdges) = Materialize.ckRepartitionCount(
-      edges.select(col(srcCol).cast("long").as("__src"),
-        col(dstCol).cast("long").as("__dst")),
-      col("__src"))
-    if (driverFinishMaxEdges > 0 && nEdges <= driverFinishMaxEdges)
-      return iterateDriver(e, Some(ranks), None, iters, dampBp, scale)
-    val nodes = e.select(col("__src").as("node"))
-      .union(e.select(col("__dst")))
-      .distinct()
-      .localCheckpoint(true)
-    val n = nodes.count()
-    require(n > 0, "empty edge set")
-    val outdeg = e.groupBy(col("__src")).agg(count(lit(1)).as("__od"))
-      .localCheckpoint(true)
-    val base = scale * (10000L - dampBp) / 10000L / n
-    // nodes new since the published ranks start at the uniform share
-    var r = nodes.join(
-        ranks.select(col("node"), col("rank")), Seq("node"), "left")
-      .select(col("node"),
-        coalesce(col("rank"), lit(scale / n)).as("rank"))
-      .localCheckpoint(true)
-    for (_ <- 0 until iters) {
-      val contribs = e
-        .join(r.withColumnRenamed("node", "__src"), Seq("__src"))
-        .join(outdeg, Seq("__src"))
-        .select(col("__dst").as("node"),
-          expr(s"(rank * ${dampBp}L div 10000L) div __od").as("__c"))
-        .groupBy(col("node")).agg(sum(col("__c")).as("__s"))
-      r = nodes.join(contribs, Seq("node"), "left")
-        .select(col("node"),
-          (lit(base) + coalesce(col("__s"), lit(0L))).as("rank"))
-        .localCheckpoint(true)
-    }
-    r
+    checkArgs(iters, dampBp, scale)
+    val (e, nEdges) = prep(edges, srcCol, dstCol)
+    run(e, nEdges, Some(ranks), None, iters, dampBp, scale,
+      driverFinishMaxEdges)
   }
 
   /** WEIGHTED PageRank: transition mass from `src` splits over its
@@ -223,10 +227,7 @@ object PageRank {
                       scale: Long = 1000000000000L,
                       driverFinishMaxEdges: Long =
                         Graph.IterDriverFinishMaxEdges): DataFrame = {
-    require(iters >= 0, "iters must be non-negative")
-    require(dampBp >= 0 && dampBp <= 10000, "dampBp in [0, 10000]")
-    require(scale > 0 && scale <= 1000000000000L,
-      "scale in (0, 10^12] keeps damped products within a long")
+    checkArgs(iters, dampBp, scale)
     // projection -> co-locate -> ONE checkpoint; the bound count AND
     // both weight-sanity extremes ride the materialization job (r18 —
     // previously a checkpoint + an extremes job + a count job + a
@@ -244,34 +245,8 @@ object PageRank {
     require(met("__mxw").asInstanceOf[Long] <= Long.MaxValue / scale,
       s"max edge weight ${met("__mxw")} overflows rank*w at scale " +
         scale)
-    if (driverFinishMaxEdges > 0 &&
-        met("__n").asInstanceOf[Long] <= driverFinishMaxEdges)
-      return iterateDriver(e, None, None, iters, dampBp, scale)
-    val nodes = e.select(col("__src").as("node"))
-      .union(e.select(col("__dst")))
-      .distinct()
-      .localCheckpoint(true)
-    val n = nodes.count()
-    // NOTE: __W would collide with __w under case-insensitive
-    // resolution — keep the name fully distinct
-    val outw = e.groupBy(col("__src")).agg(sum(col("__w")).as("__wsum"))
-      .localCheckpoint(true)
-    val base = scale * (10000L - dampBp) / 10000L / n
-    var ranks = nodes.withColumn("rank", lit(scale / n))
-    for (_ <- 0 until iters) {
-      val contribs = e
-        .join(ranks.withColumnRenamed("node", "__src"), Seq("__src"))
-        .join(outw, Seq("__src"))
-        .select(col("__dst").as("node"),
-          expr(s"((rank * ${dampBp}L div 10000L) * __w) div __wsum")
-            .as("__c"))
-        .groupBy(col("node")).agg(sum(col("__c")).as("__s"))
-      ranks = nodes.join(contribs, Seq("node"), "left")
-        .select(col("node"),
-          (lit(base) + coalesce(col("__s"), lit(0L))).as("rank"))
-        .localCheckpoint(true)
-    }
-    ranks
+    run(e, met("__n").asInstanceOf[Long], None, None, iters, dampBp,
+      scale, driverFinishMaxEdges)
   }
 
   /** Personalized (seeded-teleport) PageRank — the TrustRank shape
@@ -296,55 +271,18 @@ object PageRank {
                    scale: Long = 1000000000000L,
                    driverFinishMaxEdges: Long =
                      Graph.IterDriverFinishMaxEdges): DataFrame = {
-    require(iters >= 0, "iters must be non-negative")
-    require(dampBp >= 0 && dampBp <= 10000, "dampBp in [0, 10000]")
-    require(scale > 0 && scale <= 1000000000000L,
-      "scale in (0, 10^12] keeps damped products within a long")
-    // projection -> co-locate -> ONE checkpoint (r18, guide §2.4);
-    // nodes/seeded and both branches all read it, and the out-degree
-    // aggregate stays below the branch (the driver finish never read
-    // it)
-    val (e, nEdges) = Materialize.ckRepartitionCount(
-      edges.select(col(srcCol).cast("long").as("__src"),
-        col(dstCol).cast("long").as("__dst")),
-      col("__src"))
-    val nodes = e.select(col("__src").as("node"))
-      .union(e.select(col("__dst")))
-      .distinct()
-      .localCheckpoint(true)
+    checkArgs(iters, dampBp, scale)
+    val (e, nEdges) = prep(edges, srcCol, dstCol)
     // seed markers ride the node frame for the whole loop: one flag
-    // column instead of a per-round join against the seed table
-    val seeded = nodes.join(
+    // column instead of a per-round join against the seed table. Both
+    // twins read this node-sized flag frame — never the raw seed table
+    // (it can be huge; the flags are bounded by the node count)
+    val seeded = Graph.nodesOf(e).join(
         seeds.select(col(seedCol).cast("long").as("node")).distinct()
           .withColumn("__seed", lit(1L)),
         Seq("node"), "left")
       .select(col("node"), coalesce(col("__seed"), lit(0L)).as("__seed"))
-      .localCheckpoint(true)
-    // the driver finish collects the EDGES and the node-sized flag
-    // frame — never the raw seed table (it can be huge; the flags are
-    // bounded by the node count)
-    if (driverFinishMaxEdges > 0 && nEdges <= driverFinishMaxEdges)
-      return iterateDriver(e, None, Some(seeded), iters, dampBp, scale)
-    val outdeg = e.groupBy(col("__src")).agg(count(lit(1)).as("__od"))
-      .localCheckpoint(true)
-    val ns = seeded.agg(sum(col("__seed"))).head.getLong(0)
-    require(ns > 0, "no seed id appears in the edge set")
-    val base = scale * (10000L - dampBp) / 10000L / ns
-    var ranks = seeded.select(col("node"),
-      (col("__seed") * lit(scale / ns)).as("rank"))
-    for (_ <- 0 until iters) {
-      val contribs = e
-        .join(ranks.withColumnRenamed("node", "__src"), Seq("__src"))
-        .join(outdeg, Seq("__src"))
-        .select(col("__dst").as("node"),
-          expr(s"(rank * ${dampBp}L div 10000L) div __od").as("__c"))
-        .groupBy(col("node")).agg(sum(col("__c")).as("__s"))
-      ranks = seeded.join(contribs, Seq("node"), "left")
-        .select(col("node"),
-          (col("__seed") * lit(base) +
-            coalesce(col("__s"), lit(0L))).as("rank"))
-        .localCheckpoint(true)
-    }
-    ranks
+    run(e, nEdges, None, Some(seeded), iters, dampBp, scale,
+      driverFinishMaxEdges)
   }
 }

@@ -193,7 +193,7 @@ object SuffixDedup {
     * filter is the difference between sorting/joining every position
     * and only the duplicated ones.
     *
-    * MEASURED (r15, graft.tools.SaScaleBench — synthetic 50k-vocab
+    * MEASURED (r15, `graft.tools.ScaleBench sa` — synthetic 50k-vocab
     * corpora with ~1% planted cross-doc duplication, fresh JVM per
     * run, quiet machine, ON/OFF digests identical at every size):
     *   1.0M positions: OFF 25.3 s, ON 22.9 s (−9%)

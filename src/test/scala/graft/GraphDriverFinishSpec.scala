@@ -177,6 +177,35 @@ class GraphDriverFinishSpec extends SparkSpec {
       "sid", 4, driverFinishMaxEdges = Long.MaxValue)
       .as[(Long, Long)].collect().toSet
     assert(pdrv == pd)
+    // resume on a grown edge set: node 99 is new since the warm ranks
+    // and starts at its uniform share on both paths, values included
+    val grown = directedEdges.union(Seq((4L, 99L), (99L, 1L)).toDF("s", "d"))
+    def grownResume(bound: Long) = PageRank.resume(warm, grown, "s", "d",
+        3, driverFinishMaxEdges = bound)
+      .as[(Long, Long)].collect().toSet
+    val gd = grownResume(0L)
+    assert(gd.exists(_._1 == 99L))
+    assert(grownResume(Long.MaxValue) == gd)
+    // empty edge set: every variant refuses it the same way on both
+    // paths
+    val none = Seq.empty[(Long, Long)].toDF("s", "d")
+    val noneW = Seq.empty[(Long, Long, Long)].toDF("s", "d", "w")
+    for (bound <- Seq(0L, Long.MaxValue)) {
+      val variants = Seq[(String, () => Any)](
+        "iterate" -> (() =>
+          PageRank.iterate(none, "s", "d", 2, driverFinishMaxEdges = bound)),
+        "resume" -> (() => PageRank.resume(warm, none, "s", "d", 2,
+          driverFinishMaxEdges = bound)),
+        "iterateWeighted" -> (() => PageRank.iterateWeighted(noneW, "s",
+          "d", "w", 2, driverFinishMaxEdges = bound)),
+        "personalized" -> (() => PageRank.personalized(none, "s", "d",
+          seeds, "sid", 2, driverFinishMaxEdges = bound)))
+      for ((name, run) <- variants) {
+        val err = intercept[IllegalArgumentException](run())
+        assert(err.getMessage.contains("empty edge set"),
+          s"$name at bound $bound: ${err.getMessage}")
+      }
+    }
   }
 
   test("betweennessFromSeeds driver Brandes replay == distributed " +

@@ -115,6 +115,15 @@ class StoreSpec extends SparkSpec {
     val logTables = spark.read.parquet(s"$path/logs")
       .select("table").distinct().collect().map(_.getString(0)).toSet
     assert(logTables == Set("customer_segment"))
+    // the log rewrite leaves no staging or backup dir behind, and the
+    // surviving coverage still serves a repeat request
+    val fs = new org.apache.hadoop.fs.Path(path)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$path/logs.tmp")))
+    assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$path/logs.old")))
+    val logRows = spark.read.parquet(s"$path/logs").count()
+    store.getFeature("mktsegment", "1995-01-01", "1995-01-15")
+    assert(spark.read.parquet(s"$path/logs").count() == logRows)
     StoreCatalog.drop(spark, path, None)
     assert(StoreCatalog.tables(spark, path).isEmpty)
   }
