@@ -2,7 +2,7 @@ package graft.core
 
 import java.time.LocalDate
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
@@ -1238,45 +1238,20 @@ class FeatureStore(
     * which is what excludes OTHER processes (atomic create on
     * HDFS-like stores); waits up to `lockWaitMaxMs`. */
   def withTableLock[T](loader: String)(body: => T): T =
-    KeyedLocks.withLock(s"$storePath#$loader", lockWaitMaxMs) {
-      val lockFile = new Path(s"${tablePath(loader)}.lock")
-      // the FS-marker wait gets its own full budget — stamping the
-      // deadline before the JVM wait would leave a thread queued behind
-      // a long same-JVM writer with no time to wait out another process
-      val deadline = System.currentTimeMillis() + lockWaitMaxMs
-      fs.mkdirs(new Path(storePath))
-      var locked = false
-      while (!locked) {
-        try { fs.create(lockFile, false).close(); locked = true }
-        catch { case _: java.io.IOException =>
-          // break stale locks left by crashed writers (older than the max
-          // wait — no live writer holds a lock that long)
-          val stale = try {
-            fs.getFileStatus(lockFile).getModificationTime <
-              System.currentTimeMillis() - lockStaleMs
-          } catch { case _: java.io.IOException => false }
-          if (stale) fs.delete(lockFile, false)
-          else if (System.currentTimeMillis() > deadline)
-            throw new IllegalStateException(
-              s"Lock not released within ${lockWaitMaxMs / 1000}s: $lockFile")
-          else Thread.sleep(lockWaitIncrementMs)
-        }
-      }
-      try body finally fs.delete(lockFile, false)
-    }
+    FeatureStore.withStoreLock(fs, storePath, loader, lockWaitMaxMs,
+      lockWaitIncrementMs, lockStaleMs)(body)
 
   /** Lock timings resolve through the scoped option system (reference:
     * `diseasyoption("lock_wait_max", self)` in R/DiseasystoreBase.R:148-152)
     * — tunable per store via `graft.<Store>.lock_wait_max_ms`, globally
     * via `graft.lock_wait_max_ms`. */
   protected def lockWaitMaxMs: Long =
-    Options.millis(spark, "lock_wait_max_ms", storeName, 30 * 60 * 1000L)
+    FeatureStore.lockWaitMaxMs(spark, storeName)
   protected def lockWaitIncrementMs: Long =
-    Options.millis(spark, "lock_wait_increment_ms", storeName, 50L)
+    FeatureStore.lockWaitIncrementMs(spark, storeName)
   /** Age beyond which a lock file is considered abandoned by a crashed
     * writer and may be broken. */
-  protected def lockStaleMs: Long =
-    Options.millis(spark, "lock_stale_ms", storeName, 60 * 60 * 1000L)
+  protected def lockStaleMs: Long = FeatureStore.lockStaleMs(spark, storeName)
 
   /** Canonical scope name for option lookups: the explicit
     * `storeScope`, else the concrete class name. Factory methods that
@@ -1490,13 +1465,22 @@ object StoreCatalog {
         }
         // the scrubbed log is published like backupTo's copy: both
         // renames checked, the previous log parked until the new one
-        // is in place
+        // is in place. The read, filter and publish hold the "__logs"
+        // lock that appendLog takes, so no concurrent getFeature's log
+        // row is lost between the read and the publish; the timings
+        // come from the general option tier (a path names no store).
         val logP = new Path(s"$storePath/logs")
-        if (fs.exists(logP) && victims.nonEmpty) {
-          val logs = spark.read.parquet(logP.toString)
-            .filter(!col("table").isin(victims: _*))
-          Committer.Rename.publish(fs, logP,
-            tmp => logs.write.mode("overwrite").parquet(tmp))
+        if (victims.nonEmpty) FeatureStore.withStoreLock(fs, storePath,
+            "__logs", FeatureStore.lockWaitMaxMs(spark, ""),
+            FeatureStore.lockWaitIncrementMs(spark, ""),
+            FeatureStore.lockStaleMs(spark, "")) {
+          if (fs.exists(logP)) {
+            val logs = spark.read.schema(FeatureStore.LogSchema)
+              .parquet(logP.toString)
+              .filter(!col("table").isin(victims: _*))
+            Committer.Rename.publish(fs, logP,
+              tmp => logs.write.mode("overwrite").parquet(tmp))
+          }
         }
     }
   }
@@ -1507,6 +1491,50 @@ object FeatureStore {
     * inclusive ISO date range). */
   private[core] val LogSchema = StructType.fromDDL("`table` STRING, " +
     "slice_ts STRING, ds_start STRING, ds_end STRING, success BOOLEAN")
+
+  /** The lock protocol behind [[FeatureStore.withTableLock]] for the
+    * lock `name` of the store at `storePath`: the JVM mutex
+    * `$storePath#$name` plus the `$storePath/$name.lock` marker file.
+    * [[StoreCatalog.drop]] takes the `__logs` lock through here. */
+  private[core] def withStoreLock[T](fs: FileSystem, storePath: String,
+      name: String, waitMaxMs: Long, waitIncrementMs: Long,
+      staleMs: Long)(body: => T): T =
+    KeyedLocks.withLock(s"$storePath#$name", waitMaxMs) {
+      val lockFile = new Path(s"$storePath/$name.lock")
+      // the FS-marker wait gets its own full budget — stamping the
+      // deadline before the JVM wait would leave a thread queued behind
+      // a long same-JVM writer with no time to wait out another process
+      val deadline = System.currentTimeMillis() + waitMaxMs
+      fs.mkdirs(new Path(storePath))
+      var locked = false
+      while (!locked) {
+        try { fs.create(lockFile, false).close(); locked = true }
+        catch { case _: java.io.IOException =>
+          // break stale locks left by crashed writers (older than the max
+          // wait — no live writer holds a lock that long)
+          val stale = try {
+            fs.getFileStatus(lockFile).getModificationTime <
+              System.currentTimeMillis() - staleMs
+          } catch { case _: java.io.IOException => false }
+          if (stale) fs.delete(lockFile, false)
+          else if (System.currentTimeMillis() > deadline)
+            throw new IllegalStateException(
+              s"Lock not released within ${waitMaxMs / 1000}s: $lockFile")
+          else Thread.sleep(waitIncrementMs)
+        }
+      }
+      try body finally fs.delete(lockFile, false)
+    }
+
+  /** Lock timings for the option scope `store` ("" reads only the
+    * general `graft.<option>` tier). */
+  private[core] def lockWaitMaxMs(spark: SparkSession, store: String): Long =
+    Options.millis(spark, "lock_wait_max_ms", store, 30 * 60 * 1000L)
+  private[core] def lockWaitIncrementMs(spark: SparkSession,
+                                        store: String): Long =
+    Options.millis(spark, "lock_wait_increment_ms", store, 50L)
+  private[core] def lockStaleMs(spark: SparkSession, store: String): Long =
+    Options.millis(spark, "lock_stale_ms", store, 60 * 60 * 1000L)
 
   /** Per-storePath monotone ingest-timestamp sequence — see
     * `nextIngestTs`. */

@@ -1061,13 +1061,17 @@ object Profile {
   def spearmanR2(df: DataFrame, groupCol: String, xCol: String,
                  yCol: String, scale: Long = 1000000L): DataFrame = {
     // Pin pass 1 before pass 2 (r18, guide §5/§6 read-once): rankRows
-    // is multi-scan (its bounds collect + two bucket aggregates + the
-    // rank-attach probe each execute the input lineage), so an
-    // UNCHECKPOINTED rx made pass 2 recompute ALL of pass 1 four times
-    // — the r18 before-plan of q179 showed 18 parquet scans / 58
-    // exchanges for one query. Project to the three columns pass 2
-    // and corrOver actually need (x is consumed by pass 1) before the
-    // checkpoint so the pinned frame is as narrow as possible (§2.3).
+    // executes its input three times (the bounds collect, then the
+    // driver rank table's tally collect and rank probe — or, over the
+    // budget, two bucket aggregates and the rank-attach probe), so an
+    // UNCHECKPOINTED rx makes pass 2 recompute pass 1's scan and join
+    // each time — the r18 before-plan of q179 showed 18 parquet scans /
+    // 58 exchanges on the bucket path. On the driver-table path the
+    // checkpoint still pays: without it q179 ran the same 16 jobs but
+    // 0.5 s slower (3 traced train_pipeline pairs, 4 cores). Project to the
+    // three columns pass 2 and corrOver actually need (x is consumed by
+    // pass 1) before the checkpoint so the pinned frame is as narrow as
+    // possible (§2.3).
     val rx = Selection.rankRows(
         df.select(col(groupCol), col(xCol), col(yCol)), groupCol, xCol)
       .withColumn("__px", expr("(10000 * rank) div n"))
@@ -1135,7 +1139,7 @@ object Profile {
     require(mx - mn >= 0,
       s"quantileNormalize: value range [$mn, $mx] exceeds Long.MaxValue")
     val span = mx - mn
-    val budget = 1L << 21
+    val budget = Selection.DriverBudgetRows.toLong
     val distinctBound =
       if (span >= budget) n else math.min(span + 1L, n)
     // probe p answers rank r_p = max(1, (p·N) div scale); anchor

@@ -39,15 +39,22 @@ import org.apache.spark.sql.functions._
   * projection at target scale. Callers whose input is an expensive
   * derived frame should checkpoint it themselves.
   *
-  * When the per-(group, 2^16-wide) bucket histogram fits a driver
-  * budget (default 1M rows — any ≤2^36-wide value range, i.e. all
-  * practical integral data), the prefix sums and rank walk run on
-  * driver arrays over the collected histogram instead of
-  * window+broadcast-join shuffle plans: same exact semantics, same
-  * scan count, but each job is ONE lean partial-agg — at local[32]
-  * the job floor, not row work, dominated the BENCH_r05 selection
-  * family. Over budget, the original two-level shuffled resolution
-  * takes over unchanged.
+  * Both primitives have a driver fast path under ONE budget
+  * ([[DriverBudgetRows]], 1M rows), decided from the bounds scan:
+  * - [[valueAtRanks]]: when the per-(group, 2^16-wide) bucket
+  *   histogram fits (any ≤2^36-wide value range, i.e. all practical
+  *   integral data), the prefix sums and rank walk run on driver
+  *   arrays over the collected histogram;
+  * - [[rankRows]]: when the distinct (group, value) cells fit
+  *   (Σ_g min(span + 1, n)), the (group, value, count) tally is
+  *   collected, ranked on the driver and broadcast as a per-group
+  *   sorted table that each row binary-searches.
+  * Same exact semantics, but each job is ONE lean aggregate instead of
+  * a window+join shuffle plan — at local parallelism the job floor, not
+  * row work, dominates (BENCH_r05's selection family; q179's 30 → 16
+  * jobs). Over budget, the two-level shuffled resolution takes over
+  * unchanged; it is the only path for inputs with more distinct values
+  * than the budget.
   */
 object Selection {
 
@@ -59,6 +66,14 @@ object Selection {
 
   /** Hash-order bucket fan-out (matches [[Splits.bucket]]'s 1e6). */
   private val HB = 1000000
+
+  /** Driver budget, in rows, of every driver-side table in this family:
+    * [[valueAtRanks]]' bucket histogram, [[rankRows]]' distinct-value
+    * tally and [[Profile.quantileNormalize]]'s global value tally. At
+    * or below it the table is collected and walked on the driver;
+    * above it the distributed path runs. Results are identical on both
+    * sides. */
+  private[graft] val DriverBudgetRows: Int = 1 << 20
 
   /** Bucket widths over the group's [min, max] span — ONE formula for
     * [[valueAtRanks]] and [[rankRows]], computed driver-side AFTER
@@ -228,7 +243,7 @@ object Selection {
     */
   def valueAtRanks(df: DataFrame, groupCol: String, valueCol: String,
                    targets: Seq[(String, String)],
-                   driverBudgetRows: Int = 1 << 20,
+                   driverBudgetRows: Int = DriverBudgetRows,
                    weightCol: Option[String] = None): DataFrame = {
     require(targets.nonEmpty, "targets must be non-empty")
     val spark = df.sparkSession
@@ -411,6 +426,49 @@ object Selection {
     }
   }
 
+  /** Fast path of [[rankRows]]: the (group, value, count) tally fits
+    * the driver budget (the caller's distinct-cell bound), so it is
+    * collected in one aggregate job and ranked on the driver: per
+    * group, its distinct values ascending and, aligned, rank = 1 + rows
+    * with a smaller value. The rows pick up their group's index and `n`
+    * from a literal of the bound rows by ONE broadcast equi-join, and
+    * their rank by a binary search in the broadcast table — no window,
+    * no shuffled join. (A literal lookup relation of the whole tally,
+    * joined on (group, value), was measured slower than the bucket path
+    * at sf0.1: its 5·10^5-row broadcast alone took 3-5 s.) */
+  private def driverRanked(df: DataFrame, facts: DataFrame,
+      groupCol: String, gType: org.apache.spark.sql.types.DataType,
+      boundRows: Array[Row]): DataFrame = {
+    val spark = df.sparkSession
+    val gi: Map[Any, Int] = boundRows.iterator.map(_.get(0)).zipWithIndex.toMap
+    val byG = facts.groupBy(col(groupCol), col("__v"))
+      .agg(count(lit(1))).collect().groupBy(r => gi(r.get(0)))
+    val table: Array[(Array[Long], Array[Long])] =
+      Array.tabulate(boundRows.length) { i =>
+        val vcs = byG(i).map(r => (r.getLong(1), r.getLong(2))).sortBy(_._1)
+        (vcs.map(_._1), vcs.scanLeft(1L)(_ + _._2))
+      }
+    val bc = spark.sparkContext.broadcast(table)
+    // boxed inputs: Spark wraps a primitive-input UDF in a null check,
+    // which would make `rank` nullable unlike the bucket path's
+    val rankOf = udf { (i: java.lang.Integer, v: java.lang.Long) =>
+      val (vs, ranks) = bc.value(i)
+      ranks(java.util.Arrays.binarySearch(vs, v))
+    }.asNonNullable()
+    val groups = spark.createDataFrame(
+      java.util.Arrays.asList(boundRows.indices.map(i =>
+        Row(boundRows(i).get(0), i, boundRows(i).getLong(3))): _*),
+      org.apache.spark.sql.types.StructType(Seq(
+        org.apache.spark.sql.types.StructField("__rg", gType),
+        org.apache.spark.sql.types.StructField("__gi",
+          org.apache.spark.sql.types.IntegerType),
+        org.apache.spark.sql.types.StructField("__rn",
+          org.apache.spark.sql.types.LongType))))
+    facts.join(broadcast(groups), col(groupCol) <=> col("__rg"))
+      .select(df.columns.map(col) :+ rankOf(col("__gi"), col("__v"))
+        .as("rank") :+ col("__rn").as("n"): _*)
+  }
+
   /** EXACT per-row rank within its group — SQL `RANK()` semantics
     * (rank = 1 + rows with strictly smaller value; ties share) —
     * WITHOUT any group-partitioned window over fact rows, completing
@@ -430,6 +488,14 @@ object Selection {
     * re-attach to rows by an aggregate-shaped (group, bucket[, value])
     * join — a domain-sized hot group ranks in parallel.
     *
+    * Fast path: when the distinct (group, value) cells — bounded by
+    * Σ_g min(max − min + 1, n) from the bounds scan — fit
+    * [[DriverBudgetRows]], one aggregate job collects the (group,
+    * value, count) tally, the driver ranks each distinct value, and
+    * each row finds its rank in the broadcast table: two collects, no
+    * window and no shuffled join. The bucket machinery above runs only
+    * over the budget.
+    *
     * Output: the input columns plus `rank` and the group's non-null
     * count `n`. Nulls in `valueCol` fail fast ([[Profile.winsorize]]'s
     * contract); group cardinality is assumed broadcast-small. */
@@ -442,7 +508,8 @@ object Selection {
     * fold these instead of paying a second full scan of the facts
     * (r18, guide §6 read-once). */
   private[graft] def rankRowsWithBounds(df: DataFrame, groupCol: String,
-      valueCol: String): (DataFrame, Array[Row]) = {
+      valueCol: String, driverBudgetRows: Int = DriverBudgetRows)
+      : (DataFrame, Array[Row]) = {
     val spark = df.sparkSession
     val guarded = coalesce(col(valueCol).cast("long"),
       raise_error(lit(s"rankRows: null value in $valueCol")).cast("long"))
@@ -465,6 +532,20 @@ object Selection {
       .withColumn("rank", lit(null).cast("long"))
       .withColumn("n", lit(null).cast("long"))
       .filter(lit(false)), boundRows)
+
+    // A group holds at most min(span + 1, n) distinct values; when the
+    // total fits the driver budget, the (group, value, count) tally is
+    // model-sized and the ranks are a driver walk over it. The span is
+    // sane after the guard above, min(span, n - 1) + 1 cannot wrap, and
+    // the sum saturates at budget + 1.
+    val cap = driverBudgetRows.toLong + 1L
+    val cellBound = boundRows.foldLeft(0L) { (acc, r) =>
+      val cells = math.min(r.getLong(2) - r.getLong(1), r.getLong(3) - 1L) + 1L
+      math.min(cap, acc + math.min(cells, cap))
+    }
+    if (cellBound <= driverBudgetRows)
+      return (driverRanked(df, facts, groupCol, gType, boundRows), boundRows)
+
     val bounds = spark.createDataFrame(
       java.util.Arrays.asList(boundRows: _*), bSchema)
 

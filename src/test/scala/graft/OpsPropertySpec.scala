@@ -277,21 +277,41 @@ class OpsPropertySpec extends SparkSpec {
   }
 
   test("rankRows: RANK() semantics vs brute force, narrow and >2^32 ranges") {
-    forSeeds(rowsGen, 6) { rows =>
+    // a NULL group key and a non-string group column beside the string
+    // one: both rank paths must treat them alike
+    val gen: Gen[List[(Long, Option[String], Option[Int], Long)]] =
+      rowsGen.map(_.map { case (id, g, v) =>
+        (id, Option.when(id % 7 != 0)(g),
+          Option.when(id % 5 != 0)((id % 3).toInt), v)
+      })
+    forSeeds(gen, 6) { rows =>
       // narrow (all values within 2^32) and wide (spread over 2^40 so
       // the tie-refinement path runs) variants of the same data
-      for (scale <- Seq(1L, 1L << 40)) {
-        val scaled = rows.map { case (id, g, v) => (id, g, v * scale) }
-        val out = graft.operators.Selection.rankRows(
-            scaled.toDF("id", "g", "v"), "g", "v")
-          .select("id", "g", "v", "rank", "n")
-          .as[(Long, String, Long, Long, Long)].collect()
+      for (scale <- Seq(1L, 1L << 40); gc <- Seq("g", "k")) {
+        val scaled = rows.map { case (id, g, k, v) => (id, g, k, v * scale) }
+        val df = scaled.toDF("id", "g", "k", "v")
+        // the driver rank table (default budget) and the distributed
+        // bucket path (budget 0) must agree row for row and in schema
+        val driver = graft.operators.Selection
+          .rankRowsWithBounds(df, gc, "v")._1
+        val distributed = graft.operators.Selection
+          .rankRowsWithBounds(df, gc, "v", driverBudgetRows = 0)._1
+        assert(driver.schema == distributed.schema,
+          s"${driver.schema} vs ${distributed.schema}")
+        val out = driver.collect()
+        assert(out.sortBy(_.getLong(0)).toSeq ==
+          distributed.collect().sortBy(_.getLong(0)).toSeq)
         assert(out.length == scaled.length)
-        val byG = scaled.groupBy(_._2)
-        out.foreach { case (_, g, v, rk, n) =>
-          val vs = byG(g).map(_._3)
-          assert(n == vs.length)
-          assert(rk == vs.count(_ < v) + 1, s"rank of $v in $g")
+        val gi = df.columns.indexOf(gc)
+        val byG = scaled.groupBy(r => r.productElement(gi) match {
+          case o: Option[_] => o.getOrElse(null)
+        })
+        out.foreach { r =>
+          val vs = byG(r.get(gi)).map(_._4)
+          val v = r.getAs[Long]("v")
+          assert(r.getAs[Long]("n") == vs.length)
+          assert(r.getAs[Long]("rank") == vs.count(_ < v) + 1,
+            s"rank of $v in ${r.get(gi)}")
         }
       }
     }

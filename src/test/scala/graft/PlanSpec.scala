@@ -258,6 +258,36 @@ class PlanSpec extends SparkSpec {
     }
   }
 
+  test("q179 Spearman ranks through the driver table: no window, no shuffled join") {
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec,
+      ShuffledJoin}
+    import org.apache.spark.sql.execution.window.WindowExec
+    val sf01 = dir.replace("sf0.001", "sf0.01") // one scale up
+    val df = SparkEntry.queries("q179_spearman")(spark, sf01)
+    df.collect()
+    // AQE-final plan: both rankRows passes fit the driver budget, so the
+    // rows meet their group's rank table through a broadcast join
+    val nodes = new AdaptiveSparkPlanHelper {}
+      .collect(df.queryExecution.executedPlan) { case p => p }
+    val plan = df.queryExecution.executedPlan.treeString
+    assert(!nodes.exists(_.isInstanceOf[WindowExec]), s"window:\n$plan")
+    assert(!nodes.exists(_.isInstanceOf[ShuffledJoin]),
+      s"shuffled join:\n$plan")
+    assert(nodes.exists(_.isInstanceOf[BroadcastHashJoinExec]), plan)
+    // over the budget the bucket path runs, and it keeps the selection
+    // family's scale lock: windows only over per-bucket count rows
+    val facts = Tables.load(spark, sf01, "lineitem").select(
+      col("l_returnflag"), col("l_quantity").cast("long").as("qty"))
+    val distributed = graft.operators.Selection.rankRowsWithBounds(
+      facts, "l_returnflag", "qty", driverBudgetRows = 0)._1
+    assert(distributed.queryExecution.optimizedPlan.toString
+      .contains("Window"))
+    assert(bareFactWindows(distributed).isEmpty,
+      s"bare-group window over fact rows:\n" +
+        distributed.queryExecution.optimizedPlan)
+  }
+
   test("keep-cutoff tie-breaks: no unpartitioned window over fact rows") {
     // the boundary-tie resolvers (Classifier.filterByQuality, DSIR
     // importanceSelect) must rank tie rows through the bucketed

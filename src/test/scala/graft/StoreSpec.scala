@@ -128,6 +128,34 @@ class StoreSpec extends SparkSpec {
     assert(StoreCatalog.tables(spark, path).isEmpty)
   }
 
+  test("pattern drop rewrites the compute log under the __logs lock") {
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.ExecutionContext.Implicits.global
+    import scala.concurrent.duration._
+    val path = Files.createTempDirectory("graft-store-spec").toString
+    val store = TpchFeatureStore(spark, sfDir, path)
+    store.getFeature("n_orders", "1995-01-01", "1995-01-15")
+    store.getFeature("mktsegment", "1995-01-01", "1995-01-15")
+    val appended = ("customer_segment", "2001-01-01 00:00:00",
+      "1995-02-01", "1995-02-15", true)
+    // a concurrent getFeature's log append: it holds the lock while the
+    // drop starts, so the drop must wait and then keep the new row
+    val dropped = store.withTableLock("__logs") {
+      val d = Future(StoreCatalog.drop(spark, path, Some("order.*")))
+      Thread.sleep(1500)
+      assert(!d.isCompleted, "drop returned while __logs was locked")
+      Seq(appended).toDF("table", "slice_ts", "ds_start", "ds_end", "success")
+        .write.mode("append").parquet(s"$path/logs")
+      d
+    }
+    Await.result(dropped, 2.minutes)
+    val log = spark.read.parquet(s"$path/logs")
+      .as[(String, String, String, String, Boolean)].collect()
+    assert(!log.exists(_._1 == "order_episodes"), log.mkString("\n"))
+    assert(log.contains(appended), log.mkString("\n"))
+    StoreCatalog.drop(spark, path, None)
+  }
+
   test("keyJoinFeatures through the store matches the direct pipeline") {
     val store = TpchFeatureStore(spark, sfDir,
       Files.createTempDirectory("graft-store-spec").toString)
