@@ -96,26 +96,16 @@ object Bench {
         java.nio.file.Paths.get(path), body.getBytes)
       catch { case _: Throwable => () }
     // best-ever min per query on this machine: a min > 2x best for an
-    // untouched path is shared-JVM pressure, not a plan regression.
-    // Crude regex parse: the file is our own flat map.
+    // untouched path is shared-JVM pressure, not a plan regression
     val bestPath = "bench_best.json"
-    val prevBest: Map[String, Double] =
-      try {
-        val s = new String(java.nio.file.Files.readAllBytes(
-          java.nio.file.Paths.get(bestPath)))
-        """"([^"]+)":([-0-9.eE+]+)""".r.findAllMatchIn(s)
-          .map(m => m.group(1) -> m.group(2).toDouble).toMap
-      } catch { case _: Throwable => Map.empty }
-    // Dual threshold: >2x best for anything over 1 s (the classic
-    // phantom-regression signature, q260 r11), plus >1.5x for queries
-    // over 3 s (q179's 63% inflation slid under 2x in r12). A bare
-    // 1.5x net over-flags sub-2s queries whose fresh-JVM re-runs
-    // confirm ordinary variance (q221 1.37->1.57 s) — each false flag
-    // costs a ~40 s JVM and pollutes the suspect list's meaning.
+    val (bestCpus, prevBest) = parseBest(readFlat(bestPath))
+    // bests recorded at another core count say nothing about this
+    // pass: no suspects, no adjudication, no best/pending/retire write
+    val comparable = sameCores(bestCpus, cpus)
+    if (!comparable) System.err.println(s"BEST-SKIP: bests recorded at " +
+      s"$bestCpus cores, this pass runs at $cpus; not compared or updated")
     def findSuspects(ms: Seq[(String, Double)]): Seq[String] =
-      ms.collect { case (k, v)
-        if prevBest.get(k).exists(b =>
-          (v > 2 * b && v > 1.0) || (v > 1.5 * b && v > 3.0)) => k }
+      suspectsOf(comparable, prevBest, ms)
     val suspects0 = findSuspects(mins0)
     // ADJUDICATION runs after the shared session is gone — the fresh
     // JVMs need the machine to themselves for an honest number.
@@ -237,23 +227,16 @@ object Bench {
       System.err.println(f"SPOT-CHECK md5x2M: $s%.3f s (quiet bound $SpotQuietBound%.2f)")
       s <= SpotQuietBound
     }
-    if (!isChild && isIsolated && selected.size == 1 && !machineQuiet()) {
+    if (!isChild && isIsolated && selected.size == 1 && comparable &&
+        !machineQuiet()) {
       System.err.println("RETIRE-SKIP: host contention detected; " +
         "retire-pending state left untouched (r15 episode rule)")
-    } else if (!isChild && isIsolated && selected.size == 1) {
+    } else if (!isChild && isIsolated && selected.size == 1 && comparable) {
       val (qname, qmin) = mins.head
       val retirePath = "bench_retire.json"
-      val retirePending: Map[String, Double] =
-        try {
-          val s = new String(java.nio.file.Files.readAllBytes(
-            java.nio.file.Paths.get(retirePath)))
-          """"([^"]+)":([-0-9.eE+]+)""".r.findAllMatchIn(s)
-            .map(m => m.group(1) -> m.group(2).toDouble).toMap
-        } catch { case _: Throwable => Map.empty }
-      val trips = prevBest.get(qname).exists(b =>
-        (qmin > 2 * b && qmin > 1.0) || (qmin > 1.5 * b && qmin > 3.0))
+      val retirePending = readFlat(retirePath)
       val updated: Map[String, Double] =
-        if (!trips) {
+        if (!prevBest.get(qname).exists(trips(_, qmin))) {
           if (retirePending.contains(qname))
             System.err.println(s"RETIRE-CLEAR $qname: isolated ${
               fmt(qmin)} s back under threshold vs best ${
@@ -266,9 +249,8 @@ object Bench {
               fmt(prevBest(qname))} s unreachable in two isolated " +
               s"quiet runs (${fmt(first)}, ${fmt(qmin)}) -> best ${
               fmt(newBest)} s")
-            writeJson(bestPath, (prevBest + (qname -> newBest)).toSeq
-              .sorted.map { case (k, v) => "\"" + k + "\":" + v }
-              .mkString("{", ",", "}") + "\n")
+            writeJson(bestPath,
+              bestJson(bestCpus, (prevBest + (qname -> newBest)).toSeq))
             retirePending - qname
           case None =>
             System.err.println(s"RETIRE-PENDING $qname: isolated ${
@@ -277,9 +259,7 @@ object Bench {
               "retirement deferred until a second isolated confirmation")
             retirePending + (qname -> qmin)
         }
-      writeJson(retirePath, updated.toSeq.sorted
-        .map { case (k, v) => "\"" + k + "\":" + v }
-        .mkString("{", ",", "}") + "\n")
+      writeJson(retirePath, flatJson(updated.toSeq))
     }
     if (!isChild && !isIsolated) {
       // Best-ever AGING: a fresh-JVM adjudication is the cleanest
@@ -296,16 +276,9 @@ object Bench {
       // if the next run re-confirms. A query that stops flagging drops
       // out of pending — its best was fine.
       val pendingPath = "bench_pending.json"
-      val pending: Map[String, Double] =
-        try {
-          val s = new String(java.nio.file.Files.readAllBytes(
-            java.nio.file.Paths.get(pendingPath)))
-          """"([^"]+)":([-0-9.eE+]+)""".r.findAllMatchIn(s)
-            .map(m => m.group(1) -> m.group(2).toDouble).toMap
-        } catch { case _: Throwable => Map.empty }
+      val pending = readFlat(pendingPath)
       val stillFlagged = adjudicated.filter { case (k, v) =>
-        prevBest.get(k).exists(b =>
-          (v > 2 * b && v > 1.0) || (v > 1.5 * b && v > 3.0)) }
+        prevBest.get(k).exists(trips(_, v)) }
       val resets = stillFlagged.flatMap { case (k, v) =>
         pending.get(k).map(prev => k -> math.min(prev, v)) }
       resets.foreach { case (k, v) =>
@@ -318,17 +291,15 @@ object Bench {
           fmt(v)} s still above threshold vs best ${
           fmt(prevBest.getOrElse(k, Double.NaN))} s; reset deferred " +
           "until a second consecutive confirmation") }
-      writeJson(pendingPath, newPending.toSeq.sorted
-        .map { case (k, v) => "\"" + k + "\":" + v }
-        .mkString("{", ",", "}") + "\n")
-      val newBest = (prevBest.keySet ++ minMap.keySet).toSeq.sorted.map { k =>
-        k -> resets.getOrElse(k,
-          math.min(prevBest.getOrElse(k, Double.MaxValue),
-            minMap.getOrElse(k, Double.MaxValue)))
+      if (comparable) {
+        writeJson(pendingPath, flatJson(newPending.toSeq))
+        writeJson(bestPath, bestJson(bestCpus,
+          (prevBest.keySet ++ minMap.keySet).toSeq.map { k =>
+            k -> resets.getOrElse(k,
+              math.min(prevBest.getOrElse(k, Double.MaxValue),
+                minMap.getOrElse(k, Double.MaxValue)))
+          }))
       }
-      writeJson(bestPath, newBest
-        .map { case (k, v) => "\"" + k + "\":" + v }
-        .mkString("{", ",", "}") + "\n")
       writeJson("bench_full.json",
         s"""{"metric":"total","value":$total,"unit":"sec","repeat":$repeat,"queries":${
           mins.map { case (k, v) => "\"" + k + "\":" + v }
@@ -376,6 +347,56 @@ object Bench {
     // Printed AFTER spark.stop() so no executor/log line lands behind it.
     println(line)
   }
+
+  /** A flat `{"name":number,...}` JSON map — the best, pending and
+    * retire files (crude regex parse: the files are our own). */
+  def parseFlat(s: String): Map[String, Double] =
+    """"([^"]+)":([-0-9.eE+]+)""".r.findAllMatchIn(s)
+      .map(m => m.group(1) -> m.group(2).toDouble).toMap
+
+  private def readFlat(path: String): Map[String, Double] =
+    try parseFlat(new String(java.nio.file.Files.readAllBytes(
+      java.nio.file.Paths.get(path))))
+    catch { case _: Throwable => Map.empty }
+
+  private def entries(m: Seq[(String, Double)]): Seq[String] =
+    m.sorted.map { case (k, v) => "\"" + k + "\":" + v }
+
+  def flatJson(m: Seq[(String, Double)]): String =
+    entries(m).mkString("{", ",", "}") + "\n"
+
+  /** Core count of bests recorded without a `_cpus` entry: the
+    * documented Bench command runs at SPARK_GRAFT_CPUS=32. */
+  val DefaultBestCpus = 32
+
+  /** `bench_best.json`'s map → (the core count its bests were recorded
+    * at, per-query bests without that entry). */
+  def parseBest(m: Map[String, Double]): (Int, Map[String, Double]) =
+    (m.get("_cpus").fold(DefaultBestCpus)(_.toInt), m - "_cpus")
+
+  def bestJson(cpus: Int, best: Seq[(String, Double)]): String =
+    (s""""_cpus":$cpus""" +: entries(best)).mkString("{", ",", "}") + "\n"
+
+  /** Bests judge a pass only at the core count they were recorded at
+    * (`cpus` is SPARK_GRAFT_CPUS as given). */
+  def sameCores(bestCpus: Int, cpus: String): Boolean =
+    cpus.trim.toIntOption.contains(bestCpus)
+
+  /** Dual threshold: >2x best for anything over 1 s (the classic
+    * phantom-regression signature, q260 r11), plus >1.5x for queries
+    * over 3 s (q179's 63% inflation slid under 2x in r12). A bare 1.5x
+    * net over-flags sub-2s queries whose fresh-JVM re-runs confirm
+    * ordinary variance (q221 1.37->1.57 s) — each false flag costs a
+    * ~40 s JVM and pollutes the suspect list's meaning. */
+  def trips(best: Double, v: Double): Boolean =
+    (v > 2 * best && v > 1.0) || (v > 1.5 * best && v > 3.0)
+
+  /** Queries whose min trips against its best — none when the bests
+    * come from another core count (`comparable` false). */
+  def suspectsOf(comparable: Boolean, best: Map[String, Double],
+                 mins: Seq[(String, Double)]): Seq[String] =
+    if (!comparable) Nil
+    else mins.collect { case (k, v) if best.get(k).exists(trips(_, v)) => k }
 
   val LineBudget = 1500
 

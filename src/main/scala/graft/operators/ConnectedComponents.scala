@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.LongType
 
 /** Connected components by alternating large-star / small-star rounds
   * (Kiveris et al., "Connected Components in MapReduce and Beyond",
@@ -9,14 +10,13 @@ import org.apache.spark.sql.functions._
   * smallest id it can see, which contracts every component to a star on
   * its minimum in O(log n) rounds REGARDLESS of component diameter.
   *
-  * This is the deep-graph upgrade over [[Dedup.nearDupClusters]]'s
-  * min-label propagation (O(diameter) shuffle rounds): dedup graphs are
-  * shallow so propagation wins there, but entity-resolution /
-  * record-linkage graphs chain (A↔B↔C↔…) and want the logarithmic
-  * bound. Each round is two self-contained aggregate+join passes over
-  * the current edge list — no driver-side graph state; the edge set is
-  * locally checkpointed per round (data cached AND lineage cut, since
-  * each round reads its predecessor several times).
+  * The one component-labelling loop: entity resolution ([[run]]) and
+  * near-dup clustering ([[Dedup.nearDupClusters]]) both label through
+  * [[labelsWithRounds]]. Each round is two self-contained
+  * aggregate+join passes over the current edge list — no driver-side
+  * graph state; the edge set is locally checkpointed per round (data
+  * cached AND lineage cut, since each round reads its predecessor
+  * several times).
   */
 object ConnectedComponents {
 
@@ -63,36 +63,40 @@ object ConnectedComponents {
   }
 
   /** (id, cluster_id = component minimum) for every node appearing in
-    * `pairs`. Self-loops and duplicate/bidirectional pairs are fine. */
+    * `pairs`, ids cast to bigint. Self-loops and duplicate/bidirectional
+    * pairs are fine. */
   def run(pairs: DataFrame, aCol: String, bCol: String,
           maxIter: Int = 25,
           driverFinishMaxEdges: Long = CcDriverFinishMaxEdges): DataFrame =
-    labelsWithRounds(pairs, aCol, bCol, maxIter, driverFinishMaxEdges)._1
+    labelsWithRounds(pairs.select(col(aCol).cast("long").as("u"),
+        col(bCol).cast("long").as("v")), "u", "v", maxIter,
+      driverFinishMaxEdges)._1
 
-  /** As [[run]], also returning the number of large+small rounds used
-    * (spec hook for the O(log n) convergence claim; the driver-finish
-    * path reports 0 rounds — force it off via `driverFinishMaxEdges`
-    * to exercise the distributed loop). */
+  /** As [[run]] with ids of their input type, also returning the number
+    * of large+small rounds used (spec hook for the O(log n)
+    * convergence claim; the driver-finish path reports 0 rounds —
+    * force it off via `driverFinishMaxEdges` to exercise the
+    * distributed loop). Only bigint pairs without a null id take the
+    * union-find driver finish; other id types and null ids ride the
+    * distributed loop, where a null id links to nothing and labels as
+    * itself. */
   def labelsWithRounds(pairs: DataFrame, aCol: String, bCol: String,
                        maxIter: Int = 25,
                        driverFinishMaxEdges: Long = CcDriverFinishMaxEdges)
       : (DataFrame, Int) = {
     val spark = pairs.sparkSession
     import spark.implicits._
-    // one narrow materialization: nodes, the edge dedup and (below the
-    // bound) the driver collect all read it — the pairs subtree (often
-    // an expensive LSH/banded join) was previously computed twice
-    // the pairs subtree (often an expensive LSH/banded join) still
+    // the pairs subtree (often an expensive LSH/banded join)
     // materializes once; the bound count rides the materialization job
-    // (r18), and bound 0 now really means "force the distributed loop"
-    // (it used to driver-finish EMPTY input: 0 <= 0 — r17 ADVICE)
-    val (raw, nRaw) = Materialize.ckCount(pairs
-      .select(col(aCol).cast("long").as("u"),
-        col(bCol).cast("long").as("v")))
-    if (driverFinishMaxEdges > 0 && nRaw <= driverFinishMaxEdges) {
+    // (r18), and bound 0 forces the distributed loop even on EMPTY
+    // input (r17 ADVICE)
+    val (raw, nRaw) = Materialize.ckCount(
+      pairs.select(col(aCol).as("u"), col(bCol).as("v")))
+    val bothLong = raw.schema.fields.forall(_.dataType == LongType)
+    if (bothLong && driverFinishMaxEdges > 0 &&
+        nRaw <= driverFinishMaxEdges) {
       val rows = raw.collect()
-      // null ids ride the distributed path (they label as themselves
-      // there; a driver HashMap on unboxed longs cannot express that)
+      // a driver HashMap on unboxed longs cannot express a null id
       if (!rows.exists(r => r.isNullAt(0) || r.isNullAt(1))) {
         val labels = unionFindMinLabels(
           rows.map(r => (r.getLong(0), r.getLong(1))))
@@ -104,9 +108,12 @@ object ConnectedComponents {
         return (out, 0)
       }
     }
+    // nodes outlive raw: self-paired and null-paired ids appear in no
+    // edge generation, and raw's blocks are released below
     val nodes = raw.select(col("u").as("id"))
       .unionByName(raw.select(col("v").as("id")))
       .distinct()
+      .localCheckpoint(true)
 
     // each round references the previous edge set several times (both
     // orientations, the min table, the re-attach join): plain persist
@@ -129,6 +136,7 @@ object ConnectedComponents {
     var (edges, cs) = ckSum(raw
       .filter(col("u") =!= col("v"))
       .distinct())
+    Materialize.free(raw)
     var rounds = 0
     var converged = cs._1 == 0L
     while (!converged && rounds < maxIter) {

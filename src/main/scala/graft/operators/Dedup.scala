@@ -430,82 +430,22 @@ object Dedup {
       .filter(col("n_match") >= minMatch)
   }
 
-  /** Near-dup CLUSTERS from candidate pairs: connected components by
-    * iterative min-label propagation — each doc adopts the smallest id
-    * reachable through the pair graph, so `cluster_id` is the
-    * component's canonical doc (the keep-one-per-cluster stage after
-    * LSH). Converges in O(component diameter) rounds; dup clusters are
-    * shallow (near-identical docs pair with each other), so a handful
-    * of joins suffice where a general graph would want
-    * large-star/small-star. Deterministic and order-independent:
-    * the fixpoint is the component minimum. */
+  /** Near-dup CLUSTERS from candidate pairs: (doc_id, cluster_id) with
+    * every doc labelled by the smallest id of its component in the pair
+    * graph, so `cluster_id` is the component's canonical doc (the
+    * keep-one-per-cluster stage after LSH). Runs the large-star /
+    * small-star loop of [[ConnectedComponents.labelsWithRounds]] —
+    * O(log n) rounds whatever the component diameter — and its
+    * union-find driver finish for bigint pairs below the bound. Ids keep
+    * their input type. Deterministic and order-independent: the
+    * fixpoint is the component minimum. */
   def nearDupClusters(pairs: DataFrame, aCol: String, bCol: String,
                       maxIter: Int = 20,
                       driverFinishMaxEdges: Long =
                         ConnectedComponents.CcDriverFinishMaxEdges)
-      : DataFrame = {
-    // driver finish (r17, the ConnectedComponents posture): the
-    // min-label propagation fixpoint labels every endpoint with the
-    // MINIMUM id of its component — exactly union-find with min-id
-    // roots, so below the bound one collected pass replaces
-    // O(diameter) rounds of join + aggregate + convergence count
-    val spark = pairs.sparkSession
-    // bound count rides the materialization job (r18); bound 0 forces
-    // the distributed loop even on empty input (r17 ADVICE)
-    val (raw, nRaw) = Materialize.ckCount(
-      pairs.select(col(aCol).as("a"), col(bCol).as("b")))
-    // ids keep their input type on the distributed path; the driver
-    // twin only claims bigint graphs (every near-dup caller here) —
-    // other id types ride the loop unchanged
-    val bothLong = raw.schema.fields.forall(
-      _.dataType == org.apache.spark.sql.types.LongType)
-    if (bothLong && driverFinishMaxEdges > 0 &&
-        nRaw <= driverFinishMaxEdges) {
-      val rows = raw.collect()
-      if (!rows.exists(r => r.isNullAt(0) || r.isNullAt(1))) {
-        import spark.implicits._
-        val labels = ConnectedComponents.unionFindMinLabels(
-          rows.map(r => (r.getLong(0), r.getLong(1))))
-        import scala.jdk.CollectionConverters._
-        val out = labels.entrySet().asScala.toSeq
-          .map(e => (e.getKey: Long, e.getValue: Long))
-          .toDF("doc_id", "cluster_id")
-        Materialize.free(raw)
-        return out
-      }
-    }
-    val edges = raw.select(col("a"), col("b"))
-      .unionByName(raw.select(col("b").as("a"), col("a").as("b")))
-      .distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    var labels = edges.select(col("a").as("id")).distinct()
-      .withColumn("label", col("id"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    var iter = 0
-    var converged = false
-    while (!converged && iter < maxIter) {
-      val viaNbr = edges
-        .join(labels.select(col("id").as("b"), col("label")), "b")
-        .select(col("a").as("id"), col("label"))
-      val next = labels.unionByName(viaNbr)
-        .groupBy("id").agg(min(col("label")).as("label"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val changed = next.join(labels.withColumnRenamed("label", "__old"),
-        "id").filter(col("label") =!= col("__old")).count()
-      labels.unpersist()
-      labels = next
-      converged = changed == 0
-      iter += 1
-    }
-    edges.unpersist()
-    // the final generation's persist must not outlive the call: the
-    // output is narrow (id, label) — checkpoint it, then release
-    val out = labels
-      .select(col("id").as("doc_id"), col("label").as("cluster_id"))
-      .localCheckpoint(true)
-    labels.unpersist()
-    out
-  }
+      : DataFrame =
+    ConnectedComponents.labelsWithRounds(pairs, aCol, bCol, maxIter,
+      driverFinishMaxEdges)._1.withColumnRenamed("id", "doc_id")
 
   /** All-pairs formulation (quadratic within a block); kept as the
     * equivalence twin for NgramPrefixSpec. */

@@ -923,8 +923,7 @@ object Graph {
       // job and map-side shuffle writes it removes at scale. Above the
       // bound (billion-node regime) the checkpoint + shuffle plan
       // stands; GraphDriverFinishSpec pins both paths to parity.
-      // survivor-edge count rides the round's checkpoint job (r18)
-      val (next, nNext) = Materialize.ckCount(
+      val survivors =
         if (2 * nLive <= broadcastMaxAliveNodes) {
           val alive = deg.filter(col("__d") >= k).select(col("node"))
           live
@@ -941,7 +940,11 @@ object Graph {
               "left_semi")
             .join(alive.withColumnRenamed("node", "v"), Seq("v"),
               "left_semi")
-        })
+        }
+      // survivor-edge count rides the round's checkpoint job (r18);
+      // then the superseded live edges (and survivor checkpoint) go
+      val (next, nNext) = Materialize.ckCount(survivors)
+      Materialize.free(survivors)
       fixed = nNext == nLive
       live = next
       nLive = nNext
@@ -1085,15 +1088,15 @@ object Graph {
             .join(colr.select(col("node").as("src"), col("c").as("__cs")),
               Seq("src"))
             .groupBy(col("dst")).agg(max(col("__cs")).as("__cin"))
-          val nxt = colr
-            .join(inc.withColumnRenamed("dst", "node"), Seq("node"), "left")
-            .select(col("node"),
-              greatest(col("c"), coalesce(col("__cin"), col("c"))).as("c"))
-            .localCheckpoint(true)
-          changed = nxt
-            .join(colr.select(col("node"), col("c").as("__c0")), Seq("node"))
-            .filter(col("c") =!= col("__c0")).count()
-          colr = nxt
+          // a row changes iff an in-color beats its own: that count
+          // rides the checkpoint job, no separate join + count
+          val (nxt, m) = Materialize.ckObserve(colr
+              .join(inc.withColumnRenamed("dst", "node"), Seq("node"), "left"),
+            Seq(count(when(col("__cin") > col("c"), 1)).as("__changed")))
+          changed = m("__changed").asInstanceOf[Long]
+          Materialize.free(colr)
+          colr = nxt.select(col("node"),
+            greatest(col("c"), coalesce(col("__cin"), col("c"))).as("c"))
         }
         // (3) backward reach from each color root, within the color
         var (member, nMember) = Materialize.ckCount(
@@ -1400,15 +1403,22 @@ object Graph {
       // the under-support convergence probe rides the round's
       // checkpoint job (r18) — the old filter.isEmpty was one more
       // action per peel round
-      val (supCk, met) = Materialize.ckObserve(
-        edgeSupport(live, "u", "v"),
+      val support = edgeSupport(live, "u", "v")
+      val (supCk, met) = Materialize.ckObserve(support,
         Seq(sum(when(col("support") < k - 2, 1L).otherwise(0L))
           .as("__nUnder")))
+      // this round's live edges and edgeSupport's own checkpoints are
+      // superseded by the support table
+      Materialize.free(support)
+      Materialize.free(live)
       sup = supCk
       val nUnder = met("__nUnder")
       if (nUnder == null || nUnder.asInstanceOf[Long] == 0L) done = true
-      else live = sup.filter(col("support") >= k - 2)
-        .select(col("u"), col("v")).localCheckpoint(true)
+      else {
+        live = sup.filter(col("support") >= k - 2)
+          .select(col("u"), col("v")).localCheckpoint(true)
+        Materialize.free(sup)
+      }
     }
     sup
   }

@@ -76,16 +76,15 @@ private[graft] object Materialize {
     (ckd, row.schema.fieldNames.zip(row.toSeq).toMap)
   }
 
-  /** Release a localCheckpoint's persisted blocks NOW. Dataset-level
-    * unpersist() is a NO-OP for checkpoint RDDs (they are not tracked
-    * by the CacheManager — r17 ADVICE), so superseded generations in
-    * the round loops used to sit in executor storage until the
-    * ContextCleaner GC'd them; reach the underlying RDD through the
-    * checkpoint's LogicalRDD leaf instead. Best-effort: any other plan
-    * shape is left to GC. */
-  def free(df: DataFrame): Unit = df.queryExecution.logical match {
-    case lr: org.apache.spark.sql.execution.LogicalRDD =>
-      lr.rdd.unpersist(false)
-    case _ => ()
-  }
+  /** Release the persisted blocks of every localCheckpoint `df` reads
+    * (its LogicalRDD leaves — `df` itself when it is a checkpoint) NOW.
+    * Dataset-level unpersist() is a NO-OP for checkpoint RDDs (they are
+    * not tracked by the CacheManager — r17 ADVICE), so without this the
+    * round loops' superseded generations sit in executor storage until
+    * the ContextCleaner GCs them. Only for frames whose every
+    * checkpoint is dead: a later read of a freed checkpoint fails. */
+  def free(df: DataFrame): Unit = df.queryExecution.logical
+    .collect { case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd }
+    // a checkpoint read twice is one RDD: two async removals race
+    .distinctBy(_.id).foreach(_.unpersist(false))
 }
